@@ -641,11 +641,18 @@ class ChEngine:
         self,
         table: str,
         col_names: list[str],
-        ch_types: list[str],
-        rows: list[tuple],
+        types: list[str],
+        columns: list,
         block_rows: list[int] | None = None,
     ) -> None:
-        from ..sources.formats import spark_ingest_type
+        """Insert one client-side block: the Native, RowBinary and
+        Values input formats all end here.  Each column is a list of
+        Python values or an Arrow array of its Spark ``types`` entry;
+        the block goes to Spark as one Arrow-built partition, because
+        its row order is semantic (first-seen DISTINCT ids, golden
+        00326).  ``block_rows`` are the payload's own blocks (one block
+        when None)."""
+        from ..sources.formats import arrow_frame
         from .statements import _ingest_df
 
         name, tdef = self._resolve_table(table)
@@ -656,33 +663,19 @@ class ChEngine:
         if col_names and all(c in insertable for c in col_names):
             subset = list(col_names)
         else:
-            subset = insertable[: len(ch_types)]
-        pairs = [spark_ingest_type(t) for t in ch_types]
-        ddl = ", ".join(
-            f"`{c}` {d}" for c, (d, _f) in zip(subset, pairs)
-        )
-        conv = [f for _d, f in pairs]
-        data = [
-            tuple(
-                None if v is None else f(v)
-                for f, v in zip(conv, r)
-            )
-            for r in rows
-        ]
-        df = self.spark.createDataFrame(data, ddl)
-        if block_rows and len(block_rows) > 1:
-            _ingest_df(self, name, tdef, subset, df, False, list(block_rows))
-        else:
-            _ingest_df(self, name, tdef, subset, df, True, None)
+            subset = insertable[: len(types)]
+        df = arrow_frame(self.spark, subset, types, columns).coalesce(1)
+        n = len(columns[0]) if columns else 0
+        _ingest_df(self, name, tdef, subset, df, list(block_rows or [n]))
 
     def insert_native(self, table: str, payload: bytes) -> None:
         """INSERT ... FORMAT Native: the payload's own header supplies
         names and CH types; per-block structure is preserved
         (NativeBlockInputStream::readImpl)."""
-        from ..sources.formats import parse_native
+        from ..sources.formats import parse_native, wire_columns
 
         names, ch_types, rows, blocks = parse_native(payload, with_blocks=True)
-        self._ingest_rows(table, names, ch_types, rows, blocks)
+        self._ingest_rows(table, names, *wire_columns(ch_types, rows), blocks)
 
     def insert_rowbinary(
         self, table: str, payload: bytes, columns: list[str] | None = None
@@ -690,7 +683,7 @@ class ChEngine:
         """INSERT ... FORMAT RowBinary: schema-less row-major values
         decoded by the target table's insert-block types
         (RowBinaryRowInputStream.cpp)."""
-        from ..sources.formats import parse_rowbinary
+        from ..sources.formats import parse_rowbinary, wire_columns
 
         _name, tdef = self._resolve_table(table)
         insertable = {
@@ -701,27 +694,16 @@ class ChEngine:
             insertable[c].ch_type or "String" for c in cols
         ]
         rows = parse_rowbinary(payload, ch_types)
-        self._ingest_rows(table, cols, ch_types, rows)
+        self._ingest_rows(table, cols, *wire_columns(ch_types, rows))
 
     def read_native(self, src: bytes | str) -> DataFrame:
         """A FORMAT Native dump (bytes, or a path to one) as a
         DataFrame — schema comes from the stream itself."""
-        from ..sources.formats import parse_native, spark_ingest_type
+        from ..sources.formats import arrow_frame, parse_native, wire_columns
 
         data = src if isinstance(src, (bytes, bytearray)) else open(src, "rb").read()
         names, ch_types, rows = parse_native(bytes(data))
-        pairs = [spark_ingest_type(t) for t in ch_types]
-        ddl = ", ".join(
-            f"`{c}` {d}" for c, (d, _f) in zip(names, pairs)
-        )
-        conv = [f for _d, f in pairs]
-        return self.spark.createDataFrame(
-            [
-                tuple(None if v is None else f(v) for f, v in zip(conv, r))
-                for r in rows
-            ],
-            ddl,
-        )
+        return arrow_frame(self.spark, names, *wire_columns(ch_types, rows))
 
     def insert_native_path(
         self, table: str, src: str, split_blocks: bool = False
@@ -732,7 +714,8 @@ class ChEngine:
         driver, while the insert still runs the full ``_ingest_df``
         pipeline (projection, defaults, Replicated dedup, MV fan-out).
         Per-wire-block structure is not replayed (blocks decode
-        distributed; the ingest records one logical block)."""
+        distributed): like INSERT SELECT, the stream is cut into
+        max_block_size blocks."""
         from ..sources.native_dist import read_native_dist
         from .statements import _ingest_df
 
@@ -745,7 +728,7 @@ class ChEngine:
         else:
             subset = insertable[: len(cols)]
             df = df.toDF(*subset)
-        _ingest_df(self, name, tdef, subset, df, True, None)
+        _ingest_df(self, name, tdef, subset, df)
 
     def read_native_dir(
         self, src: str, split_blocks: bool = False, lineage: bool = False

@@ -791,10 +791,6 @@ def _t_ipv4_string_to_num(a: Args) -> str:
     )
 
 
-def _cast_tpl(sql_type: str) -> Callable[[Args], str]:
-    return lambda a: f"CAST({a[0]} AS {sql_type})"
-
-
 def _float_parse(x: str, sql_type: str) -> str:
     """strtod inf/nan spellings (readFloatText): case-insensitive
     inf/infinity/nan with optional sign — Spark's string cast only

@@ -45,7 +45,12 @@ class Token:
 
 
 def tokenize(sql: str) -> list[Token]:
-    out: list[Token] = []
+    return list(iter_tokens(sql))
+
+
+def iter_tokens(sql: str):
+    """Tokens of ``sql`` one at a time, so a caller can stop reading
+    early (an INSERT's VALUES payload is never tokenized)."""
     pos = 0
     n = len(sql)
     while pos < n:
@@ -108,21 +113,60 @@ def tokenize(sql: str) -> list[Token]:
             kind, text = "number", repr(float(text))
         elif kind == "string":
             text = _decode_hex_escapes(text)
-        out.append(Token(kind=kind, text=text, pos=m.start()))
-    return out
+        yield Token(kind=kind, text=text, pos=m.start())
 
 
 def _decode_hex_escapes(text: str) -> str:
     """``\\xHH`` byte escapes (ExpressionElementParsers.cpp
     parseEscapeSequence) are not a Spark SQL escape — decode them to the
     literal character here, re-escaping quote/backslash."""
+    buf, raw = _unescape(text)
+    try:
+        return buf.decode("utf-8")
+    except UnicodeDecodeError:
+        # CH strings are byte strings (parseEscapeSequence produces
+        # arbitrary bytes); Spark's UTF8String does not validate
+        # either, so smuggle the exact bytes via unhex — the token
+        # stays kind='string' and splices as an expression
+        return f"CAST(unhex('{raw.hex().upper()}') AS STRING)"
+
+
+# escapes that Spark's string-literal reader decodes differently from
+# the reference (\% and \_ keep their backslash, \Z is ^Z, \u is a
+# code point, \1-\9 start an octal escape)
+_SPARK_OWN_ESCAPE = re.compile(r"\\[1-9%_ZuU]")
+_SURROGATE = re.compile(r"[\ud800-\udfff]")
+
+
+def string_value(text: str) -> str | None:
+    """The value of a quoted string literal token under the reference's
+    escape rules (the content bytes ``_unescape`` decodes), or None
+    when only the SQL path reads it the same way as before: not valid
+    UTF-8, surrogate-escaped input bytes, or an escape Spark reads
+    differently."""
+    body = text[1:-1]
+    if _SURROGATE.search(body):
+        return None
+    if "\\" not in body:
+        return body
+    if _SPARK_OWN_ESCAPE.search(body):
+        return None
+    try:
+        return _unescape(text)[1].decode("utf-8")
+    except UnicodeDecodeError:
+        return None
+
+
+def _unescape(text: str) -> tuple[bytearray, bytearray]:
+    """Both readings of a quoted string literal: the body with the
+    escapes Spark lacks decoded (still a Spark SQL string body), and
+    the content bytes the reference reads."""
 
     _C_ESCAPES = {"a": "\a", "b": "\b", "f": "\f", "v": "\v", "0": "\x00", "e": "\x1b"}
 
     # \xHH are BYTE escapes: consecutive ones form one UTF-8 sequence
     # ('\xD0\xA0' is the two-byte encoding of one Cyrillic letter), so
-    # assemble bytes first and decode once at the end.  raw collects
-    # the unescaped content bytes for the invalid-UTF-8 fallback.
+    # assemble bytes first and decode once at the end.
     buf = bytearray()
     raw = bytearray()
     i = 0
@@ -159,14 +203,7 @@ def _decode_hex_escapes(text: str) -> str:
         if not (c == "'" and i in (0, n - 1)):
             raw += c.encode("utf-8")
         i += 1
-    try:
-        return buf.decode("utf-8")
-    except UnicodeDecodeError:
-        # CH strings are byte strings (parseEscapeSequence produces
-        # arbitrary bytes); Spark's UTF8String does not validate
-        # either, so smuggle the exact bytes via unhex — the token
-        # stays kind='string' and splices as an expression
-        return f"CAST(unhex('{raw.hex().upper()}') AS STRING)"
+    return buf, raw
 
 
 def render(tokens: list[Token]) -> str:

@@ -32,7 +32,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .lexer import Token, tokenize
+from .lexer import Token, iter_tokens, tokenize
 from .translate import TableMeta, _match_paren, _split_top
 
 __all__ = ["execute_statement", "TableDef"]
@@ -988,10 +988,31 @@ def _engine_meta(engine: str, args: list[list[Token]]) -> TableMeta:
     return meta
 
 
+def _statement_tokens(ch_sql: str) -> tuple[list[Token], str | None]:
+    """Tokens of one statement.  An ``INSERT ... VALUES`` is read only
+    up to its depth-0 VALUES keyword: the payload after it is data in
+    the Values input format (``formats.parse_values``), returned as
+    text and never tokenized."""
+    it = iter_tokens(ch_sql)
+    tokens: list[Token] = []
+    depth = 0
+    for t in it:
+        tokens.append(t)
+        if not tokens[0].is_kw("INSERT") or (
+            depth == 0 and t.is_kw("SELECT", "WITH")
+        ):
+            break
+        if depth == 0 and t.is_kw("VALUES"):
+            return tokens, ch_sql[t.pos + len(t.text):]
+        depth += (t.text == "(") - (t.text == ")")
+    tokens.extend(it)
+    return tokens, None
+
+
 def execute_statement(engine, ch_sql: str) -> DataFrame | None:
     """Execute one CH statement.  Returns a DataFrame for SELECTs,
     None for DDL/DML/SET.  ``engine`` is the owning ChEngine."""
-    tokens = tokenize(ch_sql)
+    tokens, payload = _statement_tokens(ch_sql)
     while tokens and tokens[-1].text == ";":
         tokens = tokens[:-1]
     if not tokens:
@@ -1016,7 +1037,7 @@ def execute_statement(engine, ch_sql: str) -> DataFrame | None:
     if head == "CREATE":
         return _create(engine, tokens)
     if head == "INSERT":
-        return _insert(engine, tokens)
+        return _insert(engine, tokens, payload)
     if head == "DROP":
         return _drop(engine, tokens)
     if head == "ALTER":
@@ -1097,6 +1118,8 @@ def execute_statement(engine, ch_sql: str) -> DataFrame | None:
             if newdef is not None:
                 newdef.raw = tdef.raw
                 newdef.parts = tdef.parts
+                newdef.row_count = tdef.row_count
+                newdef.block_sizes = tdef.block_sizes
                 _publish(engine, newdef)
             return None
         engine.tables[name] = tdef
@@ -1204,6 +1227,7 @@ def _create(engine, tokens: list[Token]) -> None:
             raw=df,
             view_sql=None if materialized else sel_sql,
         )
+        _forget_blocks(tdef)  # rows of a query, not of INSERT blocks
         engine.tables[name] = tdef
         engine.table_views[name] = view
         df.createOrReplaceTempView(view)
@@ -1319,53 +1343,15 @@ def _create(engine, tokens: list[Token]) -> None:
                     )
                 cols = _copy.deepcopy(src.columns)
             meta = _engine_meta(eng_name, eng_args)
-            ddl = ", ".join(
-                f"`{c.name}` {c.spark_type}" for c in cols if not c.is_alias
-            )
-            df = engine.spark.createDataFrame([], ddl)
             tdef = TableDef(
-                name, cols, eng_name, meta, raw=df, engine_full=engine_full
+                name, cols, eng_name, meta, raw=_empty_rows(engine, cols),
+                engine_full=engine_full,
             )
             engine.tables[name] = tdef
             engine.table_views[name] = view
             engine.table_meta[view] = meta
             if eng_name == "Merge" and len(eng_args) >= 2:
-                # Merge(db, 'regex'): reads union every table of db
-                # whose name matches (StorageMerge) — stored as a
-                # re-executed view so reads see member mutations
-                import re as _re2
-
-                mdb = eng_args[0][0].text
-                # the SQL literal keeps source escapes: '\\d' is \d
-                pat = eng_args[1][0].text.strip("'").replace("\\\\", "\\")
-                members = sorted(
-                    t for t in engine.tables
-                    if t.startswith(mdb + ".")
-                    and _re2.search(pat, t.split(".", 1)[1])
-                )
-                if not members:
-                    raise ValueError(
-                        f"Merge({mdb}, '{pat}') matches no tables"
-                    )
-                tdef.view_sql = " UNION ALL ".join(
-                    f"SELECT * FROM {m}" for m in members
-                )
-                # SAMPLE over a Merge table uses the members' sampling
-                # key (StorageMerge forwards the clause — golden 00314)
-                _m0 = engine.tables.get(members[0])
-                if _m0 is not None and _m0.meta.sample_key:
-                    tdef.meta.sample_key = _m0.meta.sample_key
-                    tdef.meta.sample_raw = _m0.meta.sample_raw
-                if _m0 is not None:
-                    # StorageMerge forwards reads to the members: PK
-                    # pruning and granule-block structure are theirs
-                    # (golden 00160)
-                    tdef.meta.primary_key = _m0.meta.primary_key
-                    tdef.meta.index_granularity = _m0.meta.index_granularity
-                df2 = engine.spark.sql(engine.translate(tdef.view_sql))
-                tdef.raw = df2
-                df2.createOrReplaceTempView(view)
-                return None
+                return _merge_view(engine, tdef, view, eng_args)
             if eng_name == "Buffer" and len(eng_args) >= 2:
                 # Buffer(db, table, ...): writes flush to the
                 # destination, reads see destination + buffer
@@ -1396,44 +1382,17 @@ def _create(engine, tokens: list[Token]) -> None:
                 for f in df.schema.fields
             ]
     elif cols is not None:
-        ddl = ", ".join(
-            f"`{c.name}` {c.spark_type}" for c in cols if not c.is_alias
-        )
-        df = engine.spark.createDataFrame([], ddl)
+        df = _empty_rows(engine, cols)
     else:
         raise ValueError("CREATE TABLE needs a column list or AS SELECT")
     tdef = TableDef(name, cols, eng_name, meta, raw=df, engine_full=engine_full)
+    if i < len(tokens) and tokens[i].is_kw("AS"):
+        _forget_blocks(tdef)  # rows of a query, not of INSERT blocks
     engine.tables[name] = tdef
     engine.table_views[name] = view
     engine.table_meta[view] = meta  # FINAL looks up by rendered name
     if eng_name == "Merge" and len(eng_args) >= 2:
-        # Merge(db, 'regex') with an explicit column list (StorageMerge
-        # matches TABLES AND VIEWS of the db — golden 00270)
-        import re as _re3
-
-        mdb = eng_args[0][0].text
-        pat = eng_args[1][0].text.strip("'").replace("\\\\", "\\")
-        members = sorted(
-            t for t in engine.tables
-            if t != name
-            and t.startswith(mdb + ".")
-            and _re3.search(pat, t.split(".", 1)[1])
-        )
-        if not members:
-            raise ValueError(f"Merge({mdb}, '{pat}') matches no tables")
-        tdef.view_sql = " UNION ALL ".join(
-            f"SELECT * FROM {m}" for m in members
-        )
-        _m0 = engine.tables.get(members[0])
-        if _m0 is not None:
-            # StorageMerge forwards reads to the members: PK pruning
-            # and granule-block structure are theirs (golden 00160)
-            tdef.meta.primary_key = _m0.meta.primary_key
-            tdef.meta.index_granularity = _m0.meta.index_granularity
-        df2 = engine.spark.sql(engine.translate(tdef.view_sql))
-        tdef.raw = df2
-        df2.createOrReplaceTempView(view)
-        return None
+        return _merge_view(engine, tdef, view, eng_args)
     if meta.replicated and meta.zk_path:
         # replicated block numbers allocate past the RESERVED range
         # (StorageReplicatedMergeTree RESERVED_BLOCK_NUMBERS = 200) —
@@ -1465,6 +1424,49 @@ def _create(engine, tokens: list[Token]) -> None:
         if name not in grp:
             grp.append(name)
     _publish(engine, tdef)
+
+
+def _merge_view(engine, tdef: TableDef, view: str, eng_args) -> None:
+    """Merge(db, 'regex'): reads union every other table or view of db
+    whose name matches (StorageMerge; golden 00270), stored as a
+    re-executed view so reads see member mutations."""
+    import re as _re
+
+    mdb = eng_args[0][0].text
+    # the SQL literal keeps source escapes: '\\d' is \d
+    pat = eng_args[1][0].text.strip("'").replace("\\\\", "\\")
+    members = sorted(
+        t for t in engine.tables
+        if t != tdef.name
+        and t.startswith(mdb + ".")
+        and _re.search(pat, t.split(".", 1)[1])
+    )
+    if not members:
+        raise ValueError(f"Merge({mdb}, '{pat}') matches no tables")
+    tdef.view_sql = " UNION ALL ".join(f"SELECT * FROM {m}" for m in members)
+    m0 = engine.tables.get(members[0])
+    if m0 is not None:
+        # StorageMerge forwards SAMPLE (the members' sampling key,
+        # golden 00314), PK pruning and granule-block structure
+        # (golden 00160) to the members
+        if m0.meta.sample_key:
+            tdef.meta.sample_key = m0.meta.sample_key
+            tdef.meta.sample_raw = m0.meta.sample_raw
+        tdef.meta.primary_key = m0.meta.primary_key
+        tdef.meta.index_granularity = m0.meta.index_granularity
+    tdef.raw = engine.spark.sql(engine.translate(tdef.view_sql))
+    _forget_blocks(tdef)
+    tdef.raw.createOrReplaceTempView(view)
+
+
+def _empty_rows(engine, cols: list[ColumnDef]) -> DataFrame:
+    """A new table's backing rows: an empty RDD-backed frame.  It has no
+    partitions, so the first INSERT checkpoints the block alone and no
+    later read scans empty ones.  (An empty local relation would be
+    folded away by the optimizer's empty-relation propagation, which
+    loses attribute ids in an INSERT SELECT's union.)"""
+    ddl = ", ".join(f"`{c.name}` {c.spark_type}" for c in cols if not c.is_alias)
+    return engine.spark.createDataFrame(engine.spark.sparkContext.emptyRDD(), ddl)
 
 
 def _publish(engine, tdef: TableDef) -> None:
@@ -1672,8 +1674,8 @@ def _row_bytes_of(tdef) -> int:
     return total
 
 
-def _insert(engine, tokens: list[Token]) -> None:
-    from .translate import Ctx, _rewrite, _strip_sub_totals, _translate_union
+def _insert(engine, tokens: list[Token], payload: str | None = None) -> None:
+    from .translate import Ctx, _strip_sub_totals, _translate_union, _union_arms
 
     i = 1
     assert tokens[i].is_kw("INTO")
@@ -1702,44 +1704,9 @@ def _insert(engine, tokens: list[Token]) -> None:
               agg_fn_of=engine._agg_fn_of,
               schema_of_sql=engine._schema_of_sql,
               session_settings=dict(engine.session_settings))
-    _values_block = False  # block-structure provenance (00340/00341)
     _arm_counts: list[int] | None = None
     if tokens[i].is_kw("VALUES"):
-        rows_sql = []
-        rows_vals: list[list[str]] = []
-        k = i + 1
-        while k < len(tokens):
-            assert tokens[k].text == "(", "VALUES expects tuples"
-            close = _match_paren(tokens, k)
-            vals = [
-                _rewrite(v, ctx)
-                for v in _split_top(tokens[k + 1 : close], ",")
-            ]
-            rows_sql.append(f"({', '.join(vals)})")
-            rows_vals.append(vals)
-            k = close + 1
-            if k < len(tokens) and tokens[k].text == ",":
-                k += 1
-        _values_block = True
-        aliases = ", ".join(f"c{j}" for j in range(len(subset)))
-        src = f"SELECT * FROM (VALUES {', '.join(rows_sql)}) AS __v({aliases})"
-        try:
-            # one partition: the VALUES block is client-side data whose
-            # ROW ORDER is semantic (first-seen DISTINCT ids, golden
-            # 00326) — Spark would otherwise spread the inline table
-            # over default parallelism
-            new_df = engine.spark.sql(src).coalesce(1)
-        except Exception:
-            # VALUES rows may hold full expressions (the reference
-            # evaluates them — ValuesRowInputStream falls back to the
-            # expression parser); Spark's inline table refuses mixed
-            # shapes, a UNION ALL of one-row SELECTs coerces them
-            selects = [
-                "SELECT "
-                + ", ".join(f"{v} AS c{j}" for j, v in enumerate(vals))
-                for vals in rows_vals
-            ]
-            new_df = engine.spark.sql("\nUNION ALL\n".join(selects))
+        return _insert_values(engine, tdef, subset, payload or "", ctx)
     elif tokens[i].is_kw("SELECT") or tokens[i].text == "(":
         sel_toks = tokens[i:]
         # a WITH TOTALS / SETTINGS extremes=1 SELECT feeding an INSERT
@@ -1754,27 +1721,7 @@ def _insert(engine, tokens: list[Token]) -> None:
         # per-arm block structure: each depth-0 UNION ALL arm is its
         # own stream whose blocks reach the squashing transform
         # separately (goldens 00341)
-        _arms, _depth, _cur = [], 0, []
-        k2 = 0
-        while k2 < len(_eff_toks):
-            tk = _eff_toks[k2]
-            if tk.text == "(":
-                _depth += 1
-            elif tk.text == ")":
-                _depth -= 1
-            if (
-                _depth == 0
-                and tk.is_kw("UNION")
-                and k2 + 1 < len(_eff_toks)
-                and _eff_toks[k2 + 1].is_kw("ALL")
-            ):
-                _arms.append(_cur)
-                _cur = []
-                k2 += 2
-                continue
-            _cur.append(tk)
-            k2 += 1
-        _arms.append(_cur)
+        _arms = _union_arms(_eff_toks)
         if len(_arms) > 1:
             try:
                 _arm_counts = [
@@ -1800,7 +1747,65 @@ def _insert(engine, tokens: list[Token]) -> None:
     else:
         raise ValueError("INSERT expects VALUES or SELECT")
 
-    _ingest_df(engine, name, tdef, subset, new_df, _values_block, _arm_counts)
+    _ingest_df(engine, name, tdef, subset, new_df, _arm_counts)
+
+
+def _insert_values(engine, tdef: TableDef, subset: list[str], payload: str, ctx) -> None:
+    """INSERT ... VALUES as the Values input format, the third typed
+    format beside Native and RowBinary.  ``parse_values`` decodes plain
+    literals; a column holding anything else (or strings mixed with
+    numbers) is rewritten to Spark SQL and evaluated, all such columns
+    in ONE constant SELECT whose ``array(...)`` coerces each column to
+    one ingest type — the reference's per-value expression fallback
+    (golden 00306).  The typed block goes to ``ChEngine._ingest_rows``."""
+    from ..sources.formats import ValuesExpr, parse_values, values_type
+    from .translate import _rewrite
+
+    unknown = set(subset) - {c.name for c in tdef.columns if not c.is_virtual}
+    if unknown:
+        raise ValueError(f"INSERT into unknown or computed columns {sorted(unknown)}")
+    rows = parse_values(payload)
+    if not rows:
+        return None
+    if any(len(r) != len(subset) for r in rows):
+        raise ValueError(f"VALUES tuples must have {len(subset)} fields")
+    columns = [list(c) for c in zip(*rows)]
+    types = [values_type(c) for c in columns]
+    for j in [j for j, t in enumerate(types) if t == "DOUBLE"]:
+        columns[j] = [None if v is None else float(v) for v in columns[j]]
+
+    def sql_of(v) -> str:
+        if isinstance(v, ValuesExpr):
+            return _rewrite(tokenize(v), ctx)
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return "NULL" if v is None else f"{v!r}D" if isinstance(v, float) else str(v)
+
+    spilled = [j for j, t in enumerate(types) if t is None]
+    if spilled:
+        import pyarrow as pa
+
+        df = engine.spark.sql("SELECT " + ", ".join(
+            f"array({', '.join(sql_of(v) for v in columns[j])}) AS c{j}"
+            for j in spilled
+        ))
+        declared = {c.name: c.spark_type for c in tdef.columns}
+        cols = []
+        for j, f in zip(spilled, df.schema.fields):
+            types[j] = f.dataType.elementType.simpleString()
+            if types[j] != "void" and "void" in types[j] and subset[j] in declared:
+                # pyarrow cannot cast NULL-typed children (it sizes
+                # them wrong): such values take the column's own type
+                types[j] = declared[subset[j]]
+                cols.append(f"CAST(c{j} AS ARRAY<{types[j]}>) AS c{j}")
+            else:
+                cols.append(f"c{j}")
+        # Arrow batches, not Rows: timestamps stay UTC instants
+        got = pa.Table.from_batches(df.selectExpr(*cols)._collect_as_arrow())
+        for k, j in enumerate(spilled):
+            columns[j] = got.column(k).combine_chunks().flatten()
+    engine._ingest_rows(tdef.name, subset, types, columns)
+    return None
 
 
 def _ingest_df(
@@ -1809,31 +1814,42 @@ def _ingest_df(
     tdef: TableDef,
     subset: list[str],
     new_df: DataFrame,
-    _values_block: bool = False,
-    _arm_counts: list[int] | None = None,
+    src_blocks: list[int] | None = None,
 ) -> None:
     """The INSERT pipeline below the source stream: schema projection,
     default evaluation, Replicated dedup, part tracking, block-size
-    recording, publication and MV fan-out.  Shared by token-level
-    INSERT (VALUES / SELECT) and the binary ingest paths
-    (``ChEngine.insert_native`` / ``insert_rowbinary`` — the input
-    direction of FormatFactory.cpp's both-way registration)."""
+    recording, publication and MV fan-out.  Shared by INSERT SELECT
+    and the client-block input formats (``ChEngine._ingest_rows``:
+    Values, Native, RowBinary — the input direction of
+    FormatFactory.cpp's both-way registration).  ``src_blocks`` are the
+    source stream's block row counts when the caller knows them (one
+    per client block or UNION ALL arm); None means a SELECT stream,
+    cut into max_block_size blocks."""
     # project into the full physical schema: subset columns
     # (wrapped/cast) first, then the remaining DEFAULT/MATERIALIZED
     # columns computed in dependency layers — their expressions may
     # reference other inserted or defaulted columns (ColumnDefault.h:
     # missing = evaluated default, never NULL; ALIAS is never stored)
+    from pyspark.sql.types import NumericType
+
     view = engine.table_views.get(name, _view_of(name))
     new_df.createOrReplaceTempView(f"__ins_{view}")
     sel = []
-    src_cols = new_df.columns
+    src_fields = new_df.schema.fields
     for c in tdef.columns:
         if c.name in subset:
-            src = f"`{src_cols[subset.index(c.name)]}`"
+            src_f = src_fields[subset.index(c.name)]
+            src = f"`{src_f.name}`"
             v = c.wrapper.format(v=src) if c.wrapper else src
             base_ch = (c.ch_type or "").removeprefix("Nullable(").removesuffix(")") \
                 if (c.ch_type or "").startswith("Nullable(") else (c.ch_type or "")
-            if base_ch == "DateTime":
+            if base_ch == "Date" and isinstance(src_f.dataType, NumericType):
+                # a number is a day number (the Values reader's
+                # expression fallback converts the literal to Date)
+                sel.append(
+                    f"date_add(DATE'1970-01-01', CAST({v} AS INT)) AS `{c.name}`"
+                )
+            elif base_ch == "DateTime":
                 # a digit string parses as a unix timestamp
                 # (ReadHelpers.h readDateTimeText falls back to
                 # readIntText — golden 00141)
@@ -1876,8 +1892,9 @@ def _ingest_df(
         seen.add(fp)
     # append to the raw backing rows (the reference appends a part);
     # localCheckpoint breaks lineage so repeated INSERTs stay flat
+    n = sum(src_blocks) if src_blocks is not None else None
     if tdef.engine.endswith("MergeTree"):
-        pmap = _track_insert_parts(engine, tdef, shaped)
+        pmap, n = _track_insert_parts(engine, tdef, shaped)
         shaped = _tag_part(tdef, shaped, pmap)
     existing = tdef.raw if tdef.raw is not None else engine.spark.table(view)
     merged = existing.unionByName(
@@ -1887,29 +1904,26 @@ def _ingest_df(
     # record the inserted BLOCK structure: the insert pipeline wraps a
     # SquashingBlockOutputStream (InterpreterInsertQuery.cpp:102) over
     # the source stream's blocks — stored-table blockSize() replays it
-    # (goldens 00340/00341).  Source blocks: one per VALUES payload,
-    # one per UNION ALL arm, else max_block_size chunks.  Sizes come
-    # from one count() on the already-checkpointed union — no extra
-    # computation of the insert itself.
-    try:
-        _total = merged.count()
-        _n = _total - tdef.row_count
-        tdef.row_count = _total
+    # (goldens 00340/00341).  The block's row count comes from the
+    # source blocks or the part rows; only a SELECT into a
+    # non-MergeTree table counts the checkpointed union.  Once the
+    # stored count is unknown (_forget_blocks) it stays unknown.
+    if tdef.row_count >= 0:
+        if n is None:
+            n = merged.count() - tdef.row_count
+        tdef.row_count += n
         _s = engine.session_settings
-        _min_rows = int(str(_s.get("min_insert_block_size_rows", 1048576)))
-        _min_bytes = int(str(_s.get("min_insert_block_size_bytes", 268435456)))
         _mbs = int(str(_s.get("max_block_size", 65536)))
-        if _arm_counts is not None:
-            _src = list(_arm_counts)
-        elif _values_block:
-            _src = [_n] if _n else []
-        else:
-            _src = [_mbs] * (_n // _mbs) + ([_n % _mbs] if _n % _mbs else [])
+        if src_blocks is None:
+            src_blocks = [_mbs] * (n // _mbs) + ([n % _mbs] if n % _mbs else [])
         tdef.block_sizes.extend(
-            _squash_blocks(_src, _min_rows, _min_bytes, _row_bytes_of(tdef))
+            _squash_blocks(
+                src_blocks,
+                int(str(_s.get("min_insert_block_size_rows", 1048576))),
+                int(str(_s.get("min_insert_block_size_bytes", 268435456))),
+                _row_bytes_of(tdef),
+            )
         )
-    except Exception:
-        tdef.block_sizes = []  # unknown structure: reads fall back
     _publish(engine, tdef)
     _sync_replicas(engine, tdef)
     # materialized-view fan-out: run each dependent MV's SELECT over
@@ -1933,6 +1947,7 @@ def _ingest_df(
             else:
                 engine.table_views.pop(name, None)
         base_df = mvdef.raw
+        _forget_blocks(mvdef)
         mvdef.raw = (
             base_df.unionByName(blk_res, allowMissingColumns=True)
             if base_df is not None
@@ -1941,6 +1956,15 @@ def _ingest_df(
         mvdef.raw.createOrReplaceTempView(
             engine.table_views.get(mv_name, _view_of(mv_name))
         )
+
+
+def _forget_blocks(tdef: TableDef) -> None:
+    """The stored rows changed without an INSERT (a merge, a partition
+    DETACH/DROP/ATTACH, rows from a query): the recorded block
+    structure no longer describes them, so reads cut max_block_size
+    blocks instead of replaying it."""
+    tdef.block_sizes = []
+    tdef.row_count = -1
 
 
 def _expr_deps(fill: str, names: set[str]) -> set[str]:
@@ -2030,16 +2054,24 @@ _TYPE_BYTES = {
 }
 
 
-def _part_month_expr(tdef: TableDef) -> str:
-    """Partition id of a row (yyyyMM of the month-partition column, or
-    'all' for unpartitioned MergeTree declarations)."""
+def _month_col(tdef: TableDef) -> str | None:
+    """The month-partition column.  The classic first engine arg is one
+    only when it is actually a Date — MergeTree(k, 8192)-style
+    declarations put a PK there instead."""
     dcol = tdef.meta.date_col
-    if dcol is not None and any(
+    if any(
         c.name == dcol and c.spark_type in ("DATE", "TIMESTAMP", "TIMESTAMP_NTZ")
         for c in tdef.columns
     ):
-        return f"date_format(`{dcol}`, 'yyyyMM')"
-    return "'all'"
+        return dcol
+    return None
+
+
+def _part_month_expr(tdef: TableDef) -> str:
+    """Partition id of a row (yyyyMM of the month-partition column, or
+    'all' for unpartitioned MergeTree declarations)."""
+    dcol = _month_col(tdef)
+    return "'all'" if dcol is None else f"date_format(`{dcol}`, 'yyyyMM')"
 
 
 def _tag_part(
@@ -2088,23 +2120,16 @@ def _retag_parts(tdef: TableDef, keep: set[str] = frozenset()) -> None:
 
 def _track_insert_parts(
     engine, tdef: TableDef, block: DataFrame
-) -> dict[str, str]:
+) -> tuple[dict[str, str], int]:
     """Record one data part per (INSERT block × month partition), like
     the reference's per-block part creation (MergeTreeDataWriter).
-    Returns {partition: part_name} for the inserted block.
-    Runs one tiny aggregation job over the just-inserted block — this
-    is the DDL path, never a query hot path."""
+    Returns {partition: part_name} and the block's row count.
+    Runs one aggregation job over the just-inserted block, one of the
+    two jobs every MergeTree INSERT pays (the other is the checkpoint),
+    so its cost is on the ingest path."""
     from pyspark.sql import functions as F
 
-    # the classic first engine arg is only a month-partition column when
-    # it is actually a Date — MergeTree(k, 8192)-style declarations put
-    # a PK there instead
-    dcol = tdef.meta.date_col
-    if dcol is not None and not any(
-        c.name == dcol and c.spark_type in ("DATE", "TIMESTAMP", "TIMESTAMP_NTZ")
-        for c in tdef.columns
-    ):
-        dcol = None
+    dcol = _month_col(tdef)
     fixed = sum(_TYPE_BYTES.get(c.spark_type, 8) for c in tdef.columns)
     str_cols = [c.name for c in tdef.columns if c.spark_type == "STRING"]
     str_bytes = (
@@ -2128,12 +2153,14 @@ def _track_insert_parts(
     else:
         grouped = block.groupBy(F.lit("all").alias("__partition")).agg(*aggs)
     pmap: dict[str, str] = {}
+    total = 0
     for r in grouped.collect():
         tdef.next_block += 1
         b = tdef.next_block
         mind = r["__mind"] if dcol is not None else "19700101"
         maxd = r["__maxd"] if dcol is not None else "19700101"
         rows = int(r["__rows"])
+        total += rows
         pmap[r["__partition"] or "all"] = f"{mind}_{maxd}_{b}_{b}_0"
         tdef.parts.append(
             {
@@ -2150,7 +2177,7 @@ def _track_insert_parts(
                 "active": 1,
             }
         )
-    return pmap
+    return pmap, total
 
 
 def merge_parts(tdef: TableDef, keep: set[str] = frozenset()) -> None:
@@ -2395,6 +2422,7 @@ def _alter(engine, tokens: list[Token]) -> None:
                     ).localCheckpoint(eager=True)
                     if p["name"] not in {q["name"] for q in tdef.parts}:
                         tdef.parts.append(p)
+            _forget_blocks(tdef)
             _publish(engine, tdef)
             _sync_replicas(engine, tdef)
             continue
@@ -2829,6 +2857,7 @@ def _optimize(engine, tokens: list[Token]) -> None:
         )
     else:
         tdef.raw = df.localCheckpoint(eager=True)
+    _forget_blocks(tdef)
     merge_parts(tdef, keep_names)
     if tdef.parts:
         # compaction may have dropped rows (Replacing dedup, Collapsing
@@ -2836,13 +2865,7 @@ def _optimize(engine, tokens: list[Token]) -> None:
         # merged part's row count from the actual merged data
         from pyspark.sql import functions as F
 
-        dcol = tdef.meta.date_col
-        if dcol is not None and not any(
-            c.name == dcol
-            and c.spark_type in ("DATE", "TIMESTAMP", "TIMESTAMP_NTZ")
-            for c in tdef.columns
-        ):
-            dcol = None
+        dcol = _month_col(tdef)
         if dcol is not None and dcol in df.columns:
             counts = {
                 r["__p"]: int(r["__c"])

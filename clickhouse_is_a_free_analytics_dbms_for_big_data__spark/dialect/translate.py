@@ -301,18 +301,14 @@ def _translate_union(tokens: list[Token], ctx: Ctx) -> str:
         ctx.current_from_sql = prev_from
 
 
-def _translate_union_inner(tokens: list[Token], ctx: Ctx) -> str:
+def _union_arms(tokens: list[Token]) -> list[list[Token]]:
+    """The depth-0 ``UNION ALL`` arms of a query (one arm if none)."""
     parts: list[list[Token]] = []
     depth = 0
     start = 0
-    i = 0
-    while i < len(tokens):
-        t = tokens[i]
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif (
+    for i, t in enumerate(tokens):
+        depth += (t.text == "(") - (t.text == ")")
+        if (
             depth == 0
             and t.is_kw("UNION")
             and i + 1 < len(tokens)
@@ -320,10 +316,12 @@ def _translate_union_inner(tokens: list[Token], ctx: Ctx) -> str:
         ):
             parts.append(tokens[start:i])
             start = i + 2
-            i += 2
-            continue
-        i += 1
     parts.append(tokens[start:])
+    return parts
+
+
+def _translate_union_inner(tokens: list[Token], ctx: Ctx) -> str:
+    parts = _union_arms(tokens)
     if len(parts) == 1:
         return _translate_select(parts[0], ctx)
     # Each UNION ALL branch keeps its own ORDER BY / LIMIT (the

@@ -53,13 +53,6 @@ def running_accumulate(
     return df.withColumn(out or f"runningAccumulate_{col}", F.sum(col).over(w))
 
 
-def row_number_in_all_blocks(
-    df: DataFrame, order_by: Sequence[Column], out: str = "row_number"
-) -> DataFrame:
-    """Global 1-based row number in the given order."""
-    return df.withColumn(out, F.row_number().over(Window.orderBy(*order_by)))
-
-
 def block_number(df: DataFrame, out: str = "block_number") -> DataFrame:
     """Partition id — the closest Spark analog of a block id."""
     return df.withColumn(out, F.spark_partition_id())

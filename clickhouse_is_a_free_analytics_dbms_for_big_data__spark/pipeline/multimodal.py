@@ -17,7 +17,6 @@ libraries are not in this container:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
@@ -74,20 +73,6 @@ def attach_media_metadata(df: DataFrame, binary_col: str, mime: str) -> DataFram
             F.lit(None).cast("string").alias("codec"),
         ),
     )
-
-
-def _fake_features(data: bytes, n: int) -> list[float]:
-    """Deterministic pseudo-features from the bytes (md5-chained)."""
-    out: list[float] = []
-    seed = data or b""
-    h = hashlib.md5(seed).digest()
-    while len(out) < n:
-        for i in range(0, len(h), 4):
-            out.append(int.from_bytes(h[i : i + 4], "big") / 2**32)
-            if len(out) >= n:
-                break
-        h = hashlib.md5(h).digest()
-    return out
 
 
 def decode_image_features(

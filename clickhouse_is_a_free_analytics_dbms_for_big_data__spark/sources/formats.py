@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import math
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,20 +105,15 @@ def _read_values(
     spark: SparkSession, path_or_text: str, schema: StructType | str | None
 ) -> DataFrame:
     """Values: ``(v, ...), (v, ...)`` — the reference's INSERT literal
-    format (small payloads by design); parsed on the driver."""
-    import ast
+    format (small payloads by design), decoded on the driver by the
+    Values input reader."""
     import os
 
     if os.path.exists(path_or_text):
         with open(path_or_text) as f:
-            text = f.read()
-    else:
-        text = path_or_text
-    rows = list(ast.literal_eval(f"[{text.strip().rstrip(',')}]"))
-    rows = [r if isinstance(r, tuple) else (r,) for r in rows]
-    if schema is not None:
-        return spark.createDataFrame(rows, schema)
-    return spark.createDataFrame(rows)
+            path_or_text = f.read()
+    rows = [tuple(r) for r in parse_values(path_or_text)]
+    return spark.createDataFrame(rows, schema)
 
 
 # ----------------------------------------------------------------- write
@@ -1239,12 +1235,6 @@ def _render_xml(
     return "".join(out)
 
 
-def _jsonable(v):
-    if isinstance(v, (list, dict, int, float, str, bool)) or v is None:
-        return v
-    return str(v)
-
-
 def _sql_literal(v) -> str:
     if v is None:
         return "NULL"
@@ -1592,6 +1582,129 @@ def spark_ingest_type(ch_t: str):
             seconds=int(v)
         )
     return "STRING", lambda v: v if isinstance(v, str) else _cell(v)
+
+
+def arrow_frame(
+    spark: SparkSession, names: list[str], types: list[str], columns: list
+) -> DataFrame:
+    """Client-side rows as a DataFrame built through Arrow: a local
+    relation, so building it pickles no Python rows and runs no job.
+    Each column is a list of Python values or an Arrow array of its
+    Spark DDL ``types`` entry."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    schema = StructType.fromDDL(
+        ", ".join(f"`{c}` {t}" for c, t in zip(names, types))
+    )
+    arrays = [
+        col if isinstance(col, pa.Array)
+        else pa.array(col, to_arrow_type(f.dataType))
+        for f, col in zip(schema.fields, columns)
+    ]
+    block = pa.Table.from_arrays(arrays, names=list(names))
+    return spark.createDataFrame(block, schema)
+
+
+def wire_columns(ch_types: list[str], rows: list[tuple]):
+    """Decoded Native / RowBinary rows as the (Spark types, columns)
+    block ``ChEngine._ingest_rows`` takes: each CH type's ingest type,
+    its values converted by ``spark_ingest_type``."""
+    pairs = [spark_ingest_type(t) for t in ch_types]
+    cols = list(zip(*rows)) if rows else [() for _ in pairs]
+    return [d for d, _f in pairs], [
+        [None if v is None else f(v) for v in col]
+        for (_d, f), col in zip(pairs, cols)
+    ]
+
+
+# ---------------------------------------------------------- Values
+
+class ValuesExpr(str):
+    """A Values field that is not a plain literal: its source text."""
+
+
+_VALUES_GAP = re.compile(r"(?:\s|--[^\n]*|/\*.*?\*/|[,;])*", re.S)
+# one plain literal (number, quoted string, NULL) and the , or ) after it
+_VALUES_PLAIN = re.compile(
+    r"\s*(?:(-?(?:0|[1-9]\d*)(?:\.\d+)?(?:[eE][+-]?\d+)?)"
+    r"|('(?:[^'\\]|\\.)*')|[Nn][Uu][Ll][Ll])\s*[,)]"
+)
+_VALUES_SCAN = re.compile(
+    r"'(?:[^'\\]|\\.)*'|`(?:[^`\\]|\\.)*`|--[^\n]*|/\*.*?\*/|[()\[\],]", re.S
+)
+
+
+def _plain_value(num: str | None, s: str | None, string_value):
+    """A plain literal's value; a ``ValuesExpr`` where the lexer would
+    fold the text (long floats, integers past UInt64), Spark would
+    refuse it (a double past its range) or ``string_value`` leaves the
+    string to the SQL reader."""
+    if num is not None:
+        if "." in num or "e" in num or "E" in num:
+            v = float(num)
+            ok = len(num.lstrip("-")) <= 24 and math.isfinite(v)
+        else:
+            v = int(num)
+            ok = abs(v) <= 0xFFFFFFFFFFFFFFFF
+        return v if ok else ValuesExpr(num)
+    if s is not None:
+        v = string_value(s)
+        return ValuesExpr(s) if v is None else v
+    return None
+
+
+def parse_values(payload: str) -> list[list]:
+    """FORMAT Values input (ValuesRowInputStream.cpp): the tuples of an
+    ``INSERT ... VALUES`` payload.  Plain literals — numbers, NULL,
+    strings by the lexer's escape rules — decode to Python values; any
+    other field is a ``ValuesExpr`` for the expression fallback (golden
+    00306).  Commas, whitespace and comments may separate tuples; a
+    trailing ``;`` ends the payload."""
+    from ..dialect.lexer import string_value
+
+    rows: list[list] = []
+    pos = _VALUES_GAP.match(payload).end()
+    while pos < len(payload):
+        if payload[pos] != "(":
+            raise ValueError(f"VALUES expects tuples, got {payload[pos:pos + 20]!r}")
+        row: list = []
+        while payload[pos] != ")":  # pos: the ( or , before a field
+            m = _VALUES_PLAIN.match(payload, pos + 1)
+            if m is not None:
+                row.append(_plain_value(m[1], m[2], string_value))
+                pos = m.end() - 1
+                continue
+            depth = 0
+            for t in _VALUES_SCAN.finditer(payload, pos + 1):
+                if depth == 0 and t[0] in (",", ")"):
+                    break
+                depth += (t[0] in ("(", "[")) - (t[0] in (")", "]"))
+            else:
+                raise ValueError(f"unterminated VALUES tuple at offset {pos}")
+            row.append(ValuesExpr(payload[pos + 1 : t.start()].strip()))
+            pos = t.start()
+        rows.append(row)
+        pos = _VALUES_GAP.match(payload, pos + 1).end()
+    return rows
+
+
+def values_type(column: list) -> str | None:
+    """Spark type of a Values column of plain literals: what Spark's
+    reading of the same literals coerces to, up to a widening the
+    INSERT's cast cannot tell apart (integers BIGINT, past Int64
+    DECIMAL(20,0); any fraction or exponent DOUBLE; NULLs alone VOID).
+    None when the column takes the expression fallback: it holds a
+    ``ValuesExpr``, or strings with numbers (Spark formats those)."""
+    kinds = set(map(type, column)) - {type(None)}
+    if ValuesExpr in kinds or (str in kinds and len(kinds) > 1):
+        return None
+    if not kinds or str in kinds:
+        return "STRING" if kinds else "VOID"
+    if float in kinds:
+        return "DOUBLE"
+    ints = [v for v in column if v is not None]
+    return "BIGINT" if -(1 << 63) <= min(ints) and max(ints) < 1 << 63 else "DECIMAL(20,0)"
 
 
 def _skip_varint(data: bytes, pos: int) -> tuple[int, int]:

@@ -447,3 +447,215 @@ def test_parts_per_partition_writes_even_parts(spark, tmp_path):
     f0 = glob.glob(os.path.join(path, "_partition=202403", "*.parquet"))[0]
     ks = [r.k for r in spark.read.parquet(f0).select("k").collect()]
     assert ks == sorted(ks)
+
+
+# ------------------------------------------------- INSERT ... VALUES input
+# The Values input format (sources/formats.parse_values) decodes plain
+# literals itself; everything else goes through the expression
+# fallback.  Each hostile block is inserted three ways and must store
+# the same rows: as written, with every field turned into a constant
+# expression (so it takes the fallback), and through Spark's own
+# inline-table reading of the rewritten literals fed to the same
+# INSERT pipeline (the reference).
+
+_HOSTILE_COLS = (
+    "(u8 UInt8, u64 UInt64, f Float64, s String, d Date, dt DateTime, "
+    "a Array(Array(UInt32)), n Nullable(Int32))"
+)
+_HOSTILE_BLOCKS = {
+    "plain": [
+        ["1", "18446744073709551615", "1e3", r"'a\\b'", "'2024-03-01'",
+         "'1700000000'", "NULL", "NULL"],
+        ["-1", "0", "-0.0", r"'it\'s'", "'2024-01-31'",
+         "'2024-03-01 10:00:00'", "NULL", "7"],
+        ["NULL", "-5", "1.5", r"'tab\there\x41'", "'1970-01-01'", "'0'",
+         "null", "-3"],
+        ["300", "9223372036854775808", "-2.5e-3", "''", "'2024-12-31'",
+         "'2147483648'", "NULL", "NULL"],
+        ["0", "1", "NULL", "'VALUES (1), (2)'", "NULL", "NULL", "NULL",
+         "2147483647"],
+        ["255", "2", "0", "')'", "'2024-02-29'", "'1'", "NULL", "NULL"],
+    ],
+    "mixed": [
+        ["1 + 1", "18446744073709551615", "1e3", "concat('x', 'y')",
+         "toDate('2024-01-31')", "'1700000000'", "[[1, 2], [3]]", "NULL"],
+        ["2", "toUInt64(7)", "-0.0", "'z'", "'2024-03-01'",
+         "toDateTime('2024-03-01 10:00:00')", "[]", "5"],
+        ["-1", "5", "NULL", r"'\x41'", "NULL", "NULL", "[[]]", "NULL"],
+    ],
+    "numbers": [
+        ["7", "7", "7", "'one'", "17000", "1700000000", "[[7]]", "7"],
+    ],
+}
+
+
+def _rows_of(eng, table):
+    return [repr(tuple(r)) for r in eng.execute(f"SELECT * FROM {table}").collect()]
+
+
+def _values_sql(table, rows, wrap=False):
+    fmt = "({})".format if wrap else str
+    return f"INSERT INTO {table} VALUES " + ", ".join(
+        "(" + ", ".join(fmt(f) for f in r) + ")" for r in rows
+    ) + ";"
+
+
+def _insert_via_spark_reading(eng, table, rows):
+    """The reference: Spark's inline-table reading of the rewritten
+    literals (a UNION ALL of one-row SELECTs where the inline table
+    refuses mixed types), fed to the shipped INSERT pipeline."""
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect.lexer import (
+        tokenize,
+    )
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect.statements import (
+        _ingest_df,
+    )
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect.translate import (
+        Ctx,
+        _rewrite,
+    )
+
+    ctx = Ctx(table_meta={}, columns_of=lambda t: None)
+    sql_rows = [[_rewrite(tokenize(f), ctx) for f in r] for r in rows]
+    tdef = eng.tables[table]
+    subset = [c.name for c in tdef.columns if not c.is_virtual]
+    names = ", ".join(f"c{j}" for j in range(len(subset)))
+    try:
+        df = eng.spark.sql(
+            "SELECT * FROM (VALUES "
+            + ", ".join("(" + ", ".join(r) + ")" for r in sql_rows)
+            + f") AS __v({names})"
+        ).coalesce(1)
+    except Exception:
+        df = eng.spark.sql("\nUNION ALL\n".join(
+            "SELECT " + ", ".join(f"{v} AS c{j}" for j, v in enumerate(r))
+            for r in sql_rows
+        ))
+    _ingest_df(eng, table, tdef, subset, df, [len(rows)])
+
+
+@pytest.fixture(scope="module")
+def ch(spark):
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect import (
+        ChEngine,
+    )
+
+    return ChEngine(spark)
+
+
+@pytest.mark.parametrize("block", sorted(_HOSTILE_BLOCKS))
+def test_values_input_matches_fallback_and_spark_reading(ch, block):
+    rows = _HOSTILE_BLOCKS[block]
+    got = {}
+    for way in ("plain", "expr", "spark"):
+        t = f"vh_{block}_{way}"
+        ch.execute(f"CREATE TABLE {t} {_HOSTILE_COLS} ENGINE = Memory")
+        if way == "spark":
+            _insert_via_spark_reading(ch, t, rows)
+        else:
+            ch.execute(_values_sql(t, rows, wrap=way == "expr"))
+        got[way] = _rows_of(ch, t)
+    assert len(got["plain"]) == len(rows)
+    assert got["plain"] == got["expr"] == got["spark"]
+
+
+def test_values_input_decodes_hostile_literals(ch):
+    ch.execute(f"CREATE TABLE vh_check {_HOSTILE_COLS} ENGINE = Memory")
+    ch.execute(_values_sql("vh_check", _HOSTILE_BLOCKS["plain"]))
+    rows = ch.execute("SELECT u64, f, s FROM vh_check").collect()
+    assert [r.s for r in rows] == [
+        "a\\b", "it's", "tab\thereA", "", "VALUES (1), (2)", ")"
+    ]
+    assert str(rows[1].f) == "-0.0" and rows[0].f == 1000.0
+
+
+@pytest.mark.parametrize("n", [1, 100_000])
+def test_values_input_block_sizes(ch, n):
+    rows = [[str(i), f"'r{i}'"] for i in range(n)]
+    for way in ("plain", "spark"):
+        ch.execute(f"CREATE TABLE vn_{n}_{way} (k UInt32, s String) ENGINE = Memory")
+    ch.execute(_values_sql(f"vn_{n}_plain", rows))
+    _insert_via_spark_reading(ch, f"vn_{n}_spark", rows)
+    got = ch.execute(f"SELECT * FROM vn_{n}_plain").collect()
+    assert got == ch.execute(f"SELECT * FROM vn_{n}_spark").collect()
+    assert [r.k for r in got] == list(range(n))  # row order is kept
+    assert ch.tables[f"vn_{n}_plain"].block_sizes == [n]
+
+
+def _jobs_of(ch, sql, qid):
+    sc = ch.spark.sparkContext
+    ch.execute(sql, query_id=qid)
+    ch.finish_query(qid)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(f"chq-{qid}"))
+
+
+def test_values_insert_job_counts(ch):
+    ch.execute("CREATE TABLE vj_mt (d Date, k UInt32) ENGINE = MergeTree(d, (k), 8192)")
+    ch.execute("CREATE TABLE vj_mem (d Date, k UInt32) ENGINE = Memory")
+    payload = ", ".join(f"('2024-0{1 + i % 3}-01', {i})" for i in range(500))
+    for t, most in (("vj_mt", 2), ("vj_mem", 1)):
+        for k in range(2):  # first insert into a fresh table, then a later one
+            n = _jobs_of(ch, f"INSERT INTO {t} VALUES {payload}", f"vj-{t}-{k}")
+            assert 1 <= n <= most, (t, k, n)
+
+
+def test_values_insert_parts_unchanged(ch):
+    ddl = "(d Date, k UInt32, s String) ENGINE = MergeTree(d, (k), 8192)"
+    rows = [["'2024-01-05'", "1", "'ab'"], ["'2024-02-10'", "2", "''"],
+            ["'2024-01-20'", "3", "'c'"], ["'2024-03-01'", "4", "'dddd'"]]
+    for way in ("plain", "spark"):
+        ch.execute(f"CREATE TABLE vp_{way} {ddl}")
+    ch.execute(_values_sql("vp_plain", rows))
+    _insert_via_spark_reading(ch, "vp_spark", rows)
+
+    def parts(t):
+        return sorted(
+            tuple(r) for r in ch.execute(
+                "SELECT name, rows, bytes, min_date, max_date FROM system.parts "
+                f"WHERE table = '{t}'"
+            ).collect()
+        )
+
+    got = parts("vp_plain")
+    assert got == parts("vp_spark")
+    assert sorted((r[1], r[3], r[4]) for r in got) == [
+        (1, "20240210", "20240210"), (1, "20240301", "20240301"),
+        (2, "20240105", "20240120"),
+    ]
+    # fixed widths (Date 2, UInt32 kept as BIGINT 8, String 8) + chars
+    assert sum(r[2] for r in got) == 4 * (2 + 8 + 8) + len("abcdddd")
+
+
+def test_fresh_table_raw_is_one_partition_after_first_insert(ch):
+    ch.execute("CREATE TABLE vf (d Date, k UInt32) ENGINE = MergeTree(d, (k), 8192)")
+    assert ch.tables["vf"].raw.rdd.getNumPartitions() == 0
+    ch.execute("INSERT INTO vf VALUES ('2024-01-01', 1), ('2024-02-01', 2)")
+    assert ch.tables["vf"].raw.rdd.getNumPartitions() == 1
+
+
+def test_row_count_changes_without_insert_forget_block_structure(ch):
+    ch.execute("CREATE TABLE vr (d Date, k UInt32, v UInt32) "
+               "ENGINE = ReplacingMergeTree(d, (k), 8192)")
+    ch.execute("INSERT INTO vr VALUES ('2024-01-01', 1, 1), ('2024-02-01', 1, 2)")
+    ch.execute("INSERT INTO vr VALUES ('2024-01-01', 1, 3)")
+    tdef = ch.tables["vr"]
+    assert (tdef.row_count, tdef.block_sizes) == (3, [2, 1])
+    ch.execute("OPTIMIZE TABLE vr")
+    assert (tdef.row_count, tdef.block_sizes) == (-1, [])
+    ch.execute("INSERT INTO vr VALUES ('2024-03-01', 2, 1)")
+    assert (tdef.row_count, tdef.block_sizes) == (-1, [])
+    ch.execute("CREATE TABLE vr2 (d Date, k UInt32) ENGINE = MergeTree(d, (k), 8192)")
+    ch.execute("INSERT INTO vr2 VALUES ('2024-01-01', 1), ('2024-02-01', 2)")
+    ch.execute("ALTER TABLE vr2 DROP PARTITION 202401")
+    assert (ch.tables["vr2"].row_count, ch.tables["vr2"].block_sizes) == (-1, [])
+
+
+def test_values_insert_with_malformed_setting_raises(ch):
+    ch.execute("CREATE TABLE vbad (k UInt32) ENGINE = Memory")
+    ch.session_settings["max_block_size"] = "lots"
+    try:
+        with pytest.raises(ValueError):
+            ch.execute("INSERT INTO vbad VALUES (1)")
+    finally:
+        del ch.session_settings["max_block_size"]
