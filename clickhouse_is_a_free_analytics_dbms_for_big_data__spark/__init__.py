@@ -7,10 +7,11 @@ Architecture (Spark-first, not a port):
                      Arrow on, UTC, shuffle partitions sized to cores).
 - ``sources``      — table catalog over parquet dirs + MergeTree-family
                      write/compaction policies re-expressed as Spark jobs.
-- ``functions``    — the reference's scalar-function dialect as Column
-                     expression builders (JVM-side, no Python UDFs in the
-                     hot path).  functions/aggregates.py adds the aggregate
-                     dialect incl. -If/-Array combinators.
+- ``dialect``      — the CH-SQL front-end: lexer, translator and the
+                     function library (``dialect/functions_map.py``, the
+                     one implementation of every reference function name).
+- ``functions``    — Column-side helpers with no SQL twin (charset,
+                     collation, dictionaries, exact hash ports).
 - ``operators``    — query-clause operators Spark lacks natively:
                      ANY JOIN, ARRAY JOIN, LIMIT BY, WITH TOTALS,
                      deterministic SAMPLE, FINAL dedup, sequenceMatch.

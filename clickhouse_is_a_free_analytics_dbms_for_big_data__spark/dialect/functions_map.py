@@ -13,8 +13,10 @@ immediately followed by ``(``:
 
 Every template expands to built-in Spark SQL expressions (JVM-side,
 whole-stage-codegen eligible) — translation never introduces a Python
-UDF.  Formulas intentionally mirror the Column builders in
-``..functions`` so the SQL path and the DataFrame path agree.
+UDF.  These emitters are the engine's only implementation of the
+reference's function names: DataFrame-side callers (``queries/*``)
+run CH-SQL text through the translator rather than keeping a Column
+copy of the library.
 
 Combinator ``-If`` (AggregateFunctionFactory.cpp:51-55) is handled
 generically: ``<agg>If(args..., cond)`` → ``<agg>(CASE WHEN cond THEN
@@ -50,10 +52,8 @@ SIMPLE: dict[str, str] = {
     "pow": "power",
     # arrays (FunctionsArray.cpp)
     "arrayDistinct": "array_distinct",
-    "arraySlice": "slice",
     "arrayConcat": "concat",
     "arrayReverse": "reverse",
-    "arraySort": "sort_array",
     "arrayIntersect": "array_intersect",
     # aggregates (AggregateFunctionFactory.cpp:65-77)
     # (uniq family lives in TEMPLATES — multi-arg form counts tuples)
@@ -76,8 +76,6 @@ SIMPLE: dict[str, str] = {
     "halfMD5": "xxhash64",
     "intHash64": "xxhash64",
     "intHash32": "hash",
-    "MD5": "md5",
-    "SHA1": "sha1",
     # misc
     "isNaN": "isnan",
 }
@@ -138,7 +136,7 @@ def _sort_by_key(lam: str, arrs: list[str], reverse: bool) -> str:
 
 
 def _array_reduce(a: Args) -> str:
-    """arrayReduce('agg', arr...) — SQL twin of functions/arrays.py:139.
+    """arrayReduce('agg', arr...) (FunctionsArray.h arrayReduce).
 
     Multi-array forms aggregate over the element tuples (zip), matching
     the reference's multi-argument aggregates (FunctionsArray.h:1387).
@@ -207,7 +205,7 @@ def _array_reduce(a: Args) -> str:
         "grouparray": arr,
         "groupuniqarray": f"array_distinct({arr})",
         # -State forms build the stored state representations
-        # (functions/state.py conventions: plain partials, avg struct)
+        # (the -State templates' shapes: plain partials, avg struct)
         "sumstate": (
             f"aggregate({arr}, CAST(0 AS BIGINT), "
             f"(acc, x) -> acc + CAST(x AS BIGINT))"
@@ -316,6 +314,10 @@ def _t_replace_one(a: Args) -> str:
 
 
 def _t_split_by_char(a: Args) -> str:
+    if a[0].strip() == "''":
+        # empty separator: one element per character, no trailing ''
+        # (FunctionsStringArray.h SplitByStringImpl)
+        return f"split({a[1]}, '(?s)(?<=.)(?=.)')"
     return f"split({a[1]}, concat('\\\\Q', {a[0]}, '\\\\E'))"
 
 
@@ -554,6 +556,18 @@ def _sql_reinterpret_uint(x: str, nbytes: int) -> str:
     )
 
 
+def _sql_reinterpret_int(x: str, nbytes: int) -> str:
+    """reinterpretAsInt8/16/32/64(str): the same bytes read as two's
+    complement."""
+    half = 1 << (8 * nbytes - 1)
+    typ = {1: "TINYINT", 2: "SMALLINT", 4: "INT", 8: "BIGINT"}[nbytes]
+    return _sql_let(
+        _sql_reinterpret_uint(x, nbytes),
+        "__ru",
+        f"CAST(CASE WHEN __ru >= {half} THEN __ru - {2 * half} ELSE __ru END AS {typ})",
+    )
+
+
 def _sql_reinterpret_f64(x: str) -> str:
     """reinterpretAsFloat64(str): IEEE-754 decode of the 8 little-endian
     bytes, built from exact power-of-two arithmetic (each step is
@@ -599,8 +613,8 @@ def _sql_reinterpret_f32(x: str) -> str:
 
 
 def _sql_url_hierarchy(u: str) -> str:
-    """SQL twin of functions/url.py:URLHierarchy — proto://host, then
-    cumulatively longer path prefixes."""
+    """URLHierarchy: proto://host, then cumulatively longer path
+    prefixes."""
     host = "concat(parse_url(__u, 'PROTOCOL'), '://', parse_url(__u, 'HOST'))"
     segs = "split(parse_url(__u, 'PATH'), '/')"
     return _sql_let(
@@ -614,7 +628,7 @@ def _sql_url_hierarchy(u: str) -> str:
 
 
 def _sql_erf(x: str) -> str:
-    """SQL twin of functions/math_fns.py:erf (A-S 7.1.26)."""
+    """erf by Abramowitz-Stegun 7.1.26."""
     ax = f"abs(CAST({x} AS DOUBLE))"
     poly = (
         "(__t * 0.254829592d + __t * __t * -0.284496736d "
@@ -644,7 +658,7 @@ def _sql_ieee_log(fn: str, x: str) -> str:
 
 
 def _sql_lgamma(x: str) -> str:
-    """SQL twin of functions/math_fns.py:lgamma (Lanczos g=7, n=9)."""
+    """lgamma by the Lanczos approximation (g=7, n=9)."""
     coeffs = [
         676.5203681218851, -1259.1392167224028, 771.32342877765313,
         -176.61502916214059, 12.507343278686905, -0.13857109526572012,
@@ -738,12 +752,19 @@ def _ch_type_name(typeof_sql: str) -> str:
     return t
 
 
-def _t_uniq(a: Args) -> str:
-    # rsd pinned to the reference's 2^12-register HLL error profile
-    # (1.04/sqrt(2^12) ~= 0.016, AggregateFunctionUniq.h) — see
-    # functions/aggregates.py UNIQ_HLL12_RSD
-    from ..functions.aggregates import UNIQ_HLL12_RSD
+# rsd pinned to the reference's 2^12-register HLL error profile:
+# 1.04 / sqrt(2^12) ~= 0.01625 (AggregateFunctionUniq.h:52-69)
+UNIQ_HLL12_RSD = 1.04 / (2**12) ** 0.5
 
+
+def _arg_state(a: Args) -> str:
+    return (
+        f"CASE WHEN ({a[0]}) IS NOT NULL AND ({a[1]}) IS NOT NULL "
+        f"THEN named_struct('k', {a[1]}, 'v', {a[0]}) END"
+    )
+
+
+def _t_uniq(a: Args) -> str:
     if len(a) == 1:
         return f"approx_count_distinct({a[0]}, {UNIQ_HLL12_RSD!r})"
     ns = ", ".join(f"'col{k + 1}', {x}" for k, x in enumerate(a))
@@ -770,12 +791,19 @@ def _t_replace_regexp_one(a: Args) -> str:
     )
 
 
-def _t_ipv4_num_to_string(a: Args) -> str:
-    x = a[0]
-    return (
-        f"concat_ws('.', CAST(({x} DIV 16777216) % 256 AS STRING), "
-        f"CAST(({x} DIV 65536) % 256 AS STRING), "
-        f"CAST(({x} DIV 256) % 256 AS STRING), CAST({x} % 256 AS STRING))"
+def _t_ipv4_num_to_string(a: Args, class_c: bool = False) -> str:
+    """IPv4NumToString(UInt32): the argument wraps to its 32 bits
+    first (the reference's UInt32 argument type — -1 prints as
+    255.255.255.255); class C masks the last octet as 'xxx'
+    (FunctionsCoding.cpp, mask_tail_octets=1)."""
+    last = "'xxx'" if class_c else "CAST(__ip % 256 AS STRING)"
+    return _sql_let(
+        f"pmod(CAST({a[0]} AS BIGINT), 4294967296)",
+        "__ip",
+        "(CASE WHEN __ip IS NULL THEN NULL ELSE concat_ws('.', "
+        "CAST(__ip DIV 16777216 AS STRING), "
+        "CAST((__ip DIV 65536) % 256 AS STRING), "
+        f"CAST((__ip DIV 256) % 256 AS STRING), {last}) END)",
     )
 
 
@@ -883,8 +911,14 @@ def _t_to_date(a: Args) -> str:
 
 
 def _cast_or_zero_tpl(sql_type: str) -> Callable[[Args], str]:
-    # ANSI off: bad casts yield NULL; reference's *OrZero yields 0.
-    return lambda a: f"coalesce(CAST({a[0]} AS {sql_type}), CAST(0 AS {sql_type}))"
+    """ConvertOrZeroImpl (FunctionsConversion.h): 0 unless the WHOLE
+    string parses as an integer — Spark's cast would truncate '1.5'
+    to 1 and trim blanks."""
+    return lambda a: (
+        f"(CASE WHEN CAST({a[0]} AS STRING) RLIKE '^[+-]?[0-9]+$' "
+        f"THEN coalesce(CAST({a[0]} AS {sql_type}), CAST(0 AS {sql_type})) "
+        f"ELSE CAST(0 AS {sql_type}) END)"
+    )
 
 
 def _t_round_scale(fn: str) -> Callable[[Args], str]:
@@ -985,11 +1019,10 @@ def _t_round_age(a: Args) -> str:
 
 def _t_sum_map(a: Args) -> str:
     """sumMap(keyArr, valArr): per-key sums over aligned arrays
-    (SummingSortedBlockInputStream.cpp nested-map summation).  Same
-    formula as functions/aggregates.py sumMap: distinct sorted keys,
-    each key's sum folded from the collected (k, v) pairs — keys are
-    aggregated BEFORE the map is built, so repeated keys across rows
-    sum instead of raising DUPLICATED_MAP_KEY."""
+    (SummingSortedBlockInputStream.cpp nested-map summation): distinct
+    sorted keys, each key's sum folded from the collected (k, v) pairs
+    — keys are aggregated BEFORE the map is built, so repeated keys
+    across rows sum instead of raising DUPLICATED_MAP_KEY."""
     ks = f"array_sort(array_distinct(flatten(collect_list({a[0]}))))"
     pairs = (
         f"flatten(collect_list(zip_with({a[0]}, {a[1]}, "
@@ -1016,8 +1049,8 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
     "uniqCombinedRaw": _t_uniq,
     "uniqCombinedLinearCounting": _t_uniq,
     "uniqCombinedBiasCorrected": _t_uniq,
-    # -State / -Merge combinators — SQL twins of functions/state.py
-    # (states are typed columns: plain partials, avg struct, HLL sketch)
+    # -State / -Merge combinators (AggregateFunctionState.h): states
+    # are typed columns — plain partials, avg struct, HLL sketch
     "sumState": lambda a: f"sum({a[0]})",
     "sumMerge": lambda a: f"sum({a[0]})",
     "countState": lambda a: f"count({a[0] if a else '1'})",
@@ -1056,6 +1089,19 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
     "groupUniqArrayMergeState": lambda a: (
         f"array_distinct(flatten(collect_list({a[0]})))"
     ),
+    # argMin/argMax state = the extreme (cmp, value) struct over rows
+    # with both arguments set (AggregateFunctionNull skips a row with
+    # any NULL argument); struct order breaks cmp ties on the value, so
+    # the merge is deterministic where the reference keeps the
+    # first-seen row (AggregateFunctionsArgMinMax.h)
+    "argMinState": lambda a: f"min({_arg_state(a)})",
+    "argMinMerge": lambda a: f"min({a[0]}).v",
+    "argMaxState": lambda a: f"max({_arg_state(a)})",
+    "argMaxMerge": lambda a: f"max({a[0]}).v",
+    # quantileExact state = the value multiset
+    # (AggregateFunctionQuantileExact.h keeps a plain value array)
+    "quantileExactState": lambda a: f"collect_list({a[0]})",
+    "quantilesExactState": lambda a: f"collect_list({a[0]})",
     "anyState": lambda a: f"first({a[0]})",
     "anyMerge": lambda a: f"first({a[0]})",
     "anyLastState": lambda a: f"last({a[0]})",
@@ -1133,10 +1179,10 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
     "reinterpretAsUInt16": lambda a: _sql_reinterpret_uint(a[0], 2),
     "reinterpretAsUInt32": lambda a: _sql_reinterpret_uint(a[0], 4),
     "reinterpretAsUInt64": lambda a: _sql_reinterpret_uint(a[0], 8),
-    "reinterpretAsInt8": lambda a: _sql_reinterpret_uint(a[0], 1),
-    "reinterpretAsInt16": lambda a: _sql_reinterpret_uint(a[0], 2),
-    "reinterpretAsInt32": lambda a: _sql_reinterpret_uint(a[0], 4),
-    "reinterpretAsInt64": lambda a: _sql_reinterpret_uint(a[0], 8),
+    "reinterpretAsInt8": lambda a: _sql_reinterpret_int(a[0], 1),
+    "reinterpretAsInt16": lambda a: _sql_reinterpret_int(a[0], 2),
+    "reinterpretAsInt32": lambda a: _sql_reinterpret_int(a[0], 4),
+    "reinterpretAsInt64": lambda a: _sql_reinterpret_int(a[0], 8),
     "reinterpretAsFloat64": lambda a: _sql_reinterpret_f64(a[0]),
     "reinterpretAsFloat32": lambda a: _sql_reinterpret_f32(a[0]),
     # reinterpretAsDate/DateTime (FunctionsReinterpret.h: the String
@@ -1150,9 +1196,11 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
         f"CAST(from_unixtime({_sql_reinterpret_uint(a[0], 4)}) "
         f"AS TIMESTAMP)"
     ),
-    # SHA2 family (FunctionsHashing.h FunctionStringHashFixedString):
-    # FixedString(28/32) raw digest bytes, same shape as our MD5-binary
-    # convention — hex() of it prints the reference's uppercase digest
+    # MD5/SHA family (FunctionsHashing.h FunctionStringHashFixedString):
+    # FixedString(16/20/28/32) raw digest bytes — hex() of it prints the
+    # reference's uppercase digest
+    "MD5": lambda a: f"unhex(md5({a[0]}))",
+    "SHA1": lambda a: f"unhex(sha1({a[0]}))",
     "SHA224": lambda a: f"unhex(sha2({a[0]}, 224))",
     "SHA256": lambda a: f"unhex(sha2({a[0]}, 256))",
     # sipHash128 (SipHash.h get128): FixedString(16), bit-exact port
@@ -1166,6 +1214,13 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
         "THEN (CASE WHEN __b = 63 THEN '-9223372036854775808' "
         "ELSE CAST(shiftleft(CAST(1 AS BIGINT), __b) AS STRING) END) "
         "END), __v -> __v IS NOT NULL), ',')"
+    ),
+    # bitmaskToArray (FunctionsCoding.h FunctionBitmaskToArray): the
+    # set bits as ascending powers of two
+    "bitmaskToArray": lambda a: (
+        "filter(transform(sequence(0, 63), __b -> "
+        f"CASE WHEN (shiftrightunsigned(CAST({a[0]} AS BIGINT), __b) & 1) = 1 "
+        "THEN shiftleft(CAST(1 AS BIGINT), __b) END), __v -> __v IS NOT NULL)"
     ),
     # URL family stragglers (FunctionsURL.h):
     # queryStringAndFragment<true>: from after the first '?' to the
@@ -1232,8 +1287,8 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
     "not": lambda a: f"(NOT {a[0]})",
     "xor": lambda a: f"(({a[0]}) <> ({a[1]}))",
     # strings
-    "empty": lambda a: f"(coalesce(length({a[0]}), 0) = 0)",
-    "notEmpty": lambda a: f"(coalesce(length({a[0]}), 0) > 0)",
+    "empty": lambda a: f"(length({a[0]}) = 0)",
+    "notEmpty": lambda a: f"(length({a[0]}) > 0)",
     # position() counts BYTES (FunctionsStringSearch.cpp PositionImpl
     # over the raw byte haystack); positionUTF8 counts code points.
     # The CaseInsensitive (non-UTF8) variant folds ASCII letters only.
@@ -1295,8 +1350,8 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
         f"THEN length(translate(replace(__vw, ', ', ','), '{{}}', '()')) "
         f"ELSE length(__vw) END)",
     ),
-    # little-endian integer bytes up to the first NUL — SQL twin of
-    # functions/reinterpret.py:reinterpretAsString (FunctionsReinterpret.cpp)
+    # little-endian integer bytes up to the first NUL
+    # (FunctionsReinterpret.cpp reinterpretAsString)
     # NOTE: built from the hex bytes, NOT char() — Spark's char(n)
     # emits the code POINT (char(208) = 'Ð', two UTF-8 bytes), while
     # the reference emits raw bytes (reinterpretAsString(33232) = 'Ё',
@@ -1344,6 +1399,13 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
         f"if({_bool(a[0])}, {a[1]}, {a[2]}))"
     ),
     "transform": _t_transform,
+    # caseWithExpr(x, v1, r1, ..., else): the CASE x WHEN ... form
+    # (FunctionsConditional.h FunctionCaseWithExpr)
+    "caseWithExpr": lambda a: (
+        f"(CASE {a[0]} "
+        + " ".join(f"WHEN {a[i]} THEN {a[i + 1]}" for i in range(1, len(a) - 1, 2))
+        + f" ELSE {a[-1]} END)"
+    ),
     "ifNull": lambda a: f"coalesce({a[0]}, {a[1]})",
     # NOT Spark's nullif: the reference builds multiIf(x = y, NULL, x)
     # and a NULL condition yields NULL — so nullIf(9, NULL) is NULL,
@@ -1509,11 +1571,15 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
     "log10": lambda a: _sql_ieee_log("log10", a[0]),
     "e": lambda a: "exp(1)",
     # glibc-exact exp via Arrow UDF: Java Math.exp differs in the last
-    # ulp (golden 00232); conformance path only — the DataFrame API
-    # keeps F.exp JVM-side
-    "exp": lambda a: f"ch_exp(CAST({a[0]} AS DOUBLE))",
-    # SQL twins of functions/math_fns.py erf/erfc/lgamma/tgamma
-    # (Abramowitz-Stegun 7.1.26 / Lanczos g=7) — let-bound via a
+    # ulp (golden 00232).  NaN bypasses the UDF, where Arrow would hand
+    # it over as a null (no let-binding: a Python UDF cannot run inside
+    # a lambda)
+    "exp": lambda a: (
+        f"(CASE WHEN isnan(CAST({a[0]} AS DOUBLE)) THEN CAST({a[0]} AS DOUBLE) "
+        f"ELSE ch_exp(CAST({a[0]} AS DOUBLE)) END)"
+    ),
+    # erf/erfc/lgamma/tgamma (FunctionsMath.h; Abramowitz-Stegun
+    # 7.1.26 / Lanczos g=7) — let-bound via a
     # single-element transform so t is evaluated once
     # erf(±0) = ±0 exactly (IEEE odd function; the A-S polynomial at
     # t=1 only approximates it)
@@ -1575,6 +1641,11 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
         f"transform({a[0]}, (x, i) -> "
         f"size(filter(slice({a[0]}, 1, i + 1), y -> y = x)))"
     ),
+    # arraySlice(arr, offset[, length]): without a length the slice
+    # runs to the end of the array (FunctionsArray.cpp arraySlice)
+    "arraySlice": lambda a: (
+        f"slice({a[0]}, {a[1]}, {a[2] if len(a) > 2 else f'size({a[0]})'})"
+    ),
     # null-safe 1-based access, negative from end; 0/out-of-range → NULL
     # (FunctionsArray.cpp arrayElement; same form as the [] subscript in
     # translate._postfix)
@@ -1584,8 +1655,10 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
     ),
     # lambda forms sort by the mapped key (FunctionsHigherOrder.h
     # arraySort(f, arr)): decorate-sort-undecorate over structs
+    # NULLs sort last (FunctionsHigherOrder.h arraySort over
+    # Nullable elements: nulls_direction = 1)
     "arraySort": lambda a: (
-        f"sort_array({a[0]})"
+        f"array_sort({a[0]})"
         if len(a) == 1
         else _sort_by_key(a[0], a[1:], reverse=False)
     ),
@@ -1680,8 +1753,7 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
         + " OR ".join(f"((shiftright({a[0]}, {i}) & 1) = 1)" for i in a[1:])
         + ") AS INT)"
     ),
-    # formatReadableSize (FunctionsFormatting.cpp) — mirror of
-    # functions/misc.py:52 (same tier ladder, format_number 2 dp)
+    # formatReadableSize (FunctionsFormatting.cpp)
     "formatReadableSize": lambda a: _format_readable_size(a[0]),
     # URL (FunctionsURL.cpp)
     # CH String results are never NULL — an unparseable URL yields ''
@@ -1700,9 +1772,9 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
         "CASE WHEN __tld = '' OR substr(__tld, 1, 1) <= '9' THEN '' ELSE __tld END",
     ),
     "path": lambda a: f"parse_url({a[0]}, 'PATH')",
-    # ExtractPathFull: path + query string + fragment — everything
-    # after the authority
-    "pathFull": lambda a: f"regexp_replace({a[0]}, '^[a-zA-Z0-9+.!-]+://[^/?#]*', '')",
+    # ExtractPathFull (FunctionsURL.h): the first '/' must open a '//';
+    # the result runs from the next '/' after it to the end, else ''
+    "pathFull": lambda a: f"regexp_extract({a[0]}, '^[^/]*//[^/]*(/.*)$', 1)",
     "queryString": lambda a: f"parse_url({a[0]}, 'QUERY')",
     "fragment": lambda a: f"parse_url({a[0]}, 'REF')",
     "extractURLParameter": _sql_extract_url_param,
@@ -1713,7 +1785,6 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
     "cutToFirstSignificantSubdomain": lambda a: _sql_fss(a[0], _CUT_FSS_CASE),
     "cutWWW": lambda a: f"regexp_replace({a[0]}, '//www\\\\.', '//')",
     # URLHierarchy: cumulative prefixes proto://host, /seg1, /seg1/seg2…
-    # (SQL twin of functions/url.py:URLHierarchy)
     "URLHierarchy": lambda a: _sql_url_hierarchy(a[0]),
     # URLHash stand-in (FunctionsHashing.cpp URLHash): hash of the URL
     # with ONE trailing slash/fragment stripped — equality-compatible
@@ -1739,18 +1810,16 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
     # replicate(x, arr): constant x expanded to arr's shape
     # (FunctionsMiscellaneous.cpp FunctionReplicate)
     "replicate": lambda a: f"transform({a[1]}, __x -> {a[0]})",
-    "cutQueryString": lambda a: f"regexp_replace({a[0]}, '\\\\?.*$', '')",
+    # CutSubstringImpl<ExtractQueryString<false>> (FunctionsURL.h): the
+    # cut runs from the first '?' up to (not including) the next '#'
+    "cutQueryString": lambda a: (
+        f"regexp_replace({a[0]}, '^([^?]*)\\\\?[^#]*', '$1')"
+    ),
     "cutFragment": lambda a: f"regexp_replace({a[0]}, '#.*$', '')",
     # IP (FunctionsCoding.cpp)
     "IPv4NumToString": _t_ipv4_num_to_string,
     "IPv4StringToNum": _t_ipv4_string_to_num,
-    # class-C mask: last octet rendered as 'xxx'
-    # (FunctionsCoding.cpp IPv4NumToStringClassC: mask_tail_octets=1)
-    "IPv4NumToStringClassC": lambda a: (
-        f"concat_ws('.', CAST(({a[0]} DIV 16777216) % 256 AS STRING), "
-        f"CAST(({a[0]} DIV 65536) % 256 AS STRING), "
-        f"CAST(({a[0]} DIV 256) % 256 AS STRING), 'xxx')"
-    ),
+    "IPv4NumToStringClassC": lambda a: _t_ipv4_num_to_string(a, class_c=True),
     # v4-mapped FixedString(16): 10 zero bytes, 0xFFFF, then the addr
     # (FunctionsCoding.cpp FunctionIPv4ToIPv6 / mapIPv4ToIPv6)
     "IPv4ToIPv6": lambda a: (
@@ -1789,8 +1858,11 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
     "version": lambda a: "'1.1.54189-spark'",
     "hostName": lambda a: "'localhost'",
     "currentDatabase": lambda a: "'default'",
+    # UnicodeBar::getWidth clamps x to [min, max] first
+    # (FunctionsMiscellaneous.cpp FunctionBar)
     "bar": lambda a: (
-        f"repeat('█', CAST(bround((({a[0]}) - ({a[1]})) / (({a[2]}) - ({a[1]})) * "
+        f"repeat('█', CAST(bround((least(greatest({a[0]}, {a[1]}), {a[2]}) "
+        f"- ({a[1]})) / (({a[2]}) - ({a[1]})) * "
         f"{a[3] if len(a) > 3 else '80'}) AS INT))"
     ),
     "greatCircleDistance": lambda a: (
@@ -1803,6 +1875,27 @@ TEMPLATES: dict[str, Callable[[Args], str]] = {
     ),
 }
 
+
+
+def _null_in_null_out(tpl: Callable[[Args], str]) -> Callable[[Args], str]:
+    return lambda a: f"(CASE WHEN ({a[0]}) IS NULL THEN NULL ELSE {tpl(a)} END)"
+
+
+# NULL in, NULL out (IFunction::useDefaultImplementationForNulls): these
+# bodies turn an unparseable value into the type default ('' / 0 / []),
+# which must not swallow a NULL argument
+for _fn in (
+    "protocol", "domain", "domainWithoutWWW", "topLevelDomain",
+    "queryStringAndFragment", "extractURLParameter", "extractURLParameters",
+    "extractURLParameterNames", "URLHierarchy", "URLPathHierarchy",
+    "visitParamHas", "visitParamExtractUInt", "visitParamExtractInt",
+    "visitParamExtractFloat", "visitParamExtractBool",
+    "visitParamExtractString", "visitParamExtractRaw",
+    "formatReadableSize", "IPv4StringToNum", "bitmaskToArray",
+    "reinterpretAsDate", "reinterpretAsDateTime",
+):
+    TEMPLATES[_fn] = _null_in_null_out(TEMPLATES[_fn])
+
 # ------------------------------------------------------- parametric aggs
 
 
@@ -1812,7 +1905,11 @@ def _exact_q_nth(x: str, levels: list[str], as_array: bool) -> str:
     insertResultInto): nth_element at n = floor(level * size) (level
     >= 1 -> size-1), the ELEMENT itself — no interpolation, result
     keeps the argument type."""
-    arr = f"array_sort(collect_list({x}))"
+    return _nth_of_sorted(f"array_sort(collect_list({x}))", levels, as_array)
+
+
+def _nth_of_sorted(arr: str, levels: list[str], as_array: bool) -> str:
+    """The nth-element rule over an already sorted array."""
 
     def one(p: str) -> str:
         lv = f"CAST({p} AS DOUBLE)"
@@ -1828,6 +1925,7 @@ def _exact_q_nth(x: str, levels: list[str], as_array: bool) -> str:
         else one(levels[0])
     )
     return _sql_let(arr, "__qx", body)
+
 
 def _p_quantile(exact: bool) -> Callable[[Args, Args], str]:
     fn = "percentile" if exact else "percentile_approx"
@@ -1878,28 +1976,35 @@ def _interp_quantile_of(arr_sql: str, p: str) -> str:
     return f"({lov} * (1 - {frac}) + {hiv} * {frac})"
 
 
-def _seq_encoded(args: Args) -> str:
-    """Time-ordered condition-digit string — SQL twin of
-    operators/sequence_match.py:_encode_events (same sort_array over
-    collect_list aggregate, first-match-wins digit)."""
+def _seq_events(args: Args) -> str:
+    """(time, condition digit) event list — the sequenceMatch state
+    (AggregateFunctionSequenceMatch.h stores (timestamp, bitset)
+    events); SQL twin of operators/sequence_match.py:_encode_events
+    (first-match-wins digit, 'x' = no condition)."""
     ts, conds = args[0], args[1:]
     whens = " ".join(
         f"WHEN {_bool(c)} THEN '{i + 1}'" for i, c in enumerate(conds)
     )
     char = f"(CASE {whens} ELSE 'x' END)"
-    pairs = f"collect_list(named_struct('t', {ts}, 'c', {char}))"
-    return f"array_join(transform(array_sort({pairs}), s -> s.c), '')"
+    return f"collect_list(named_struct('t', {ts}, 'c', {char}))"
 
 
-def _p_sequence(count: bool) -> Callable[[Args, Args], str]:
+def _p_sequence(count: bool, merge: bool = False) -> Callable[[Args, Args], str]:
+    """sequenceMatch/Count; ``merge`` reads -State event lists and
+    concatenates them before the time sort (the reference's merge())."""
     from ..operators.sequence_match import _pattern_to_regex
 
     def tpl(params: Args, args: Args) -> str:
         pattern = params[0].strip("'")
         if "(?t" in pattern:
+            if merge:
+                raise ValueError(
+                    "time-constrained sequence patterns have no -State form"
+                )
             return _seq_timed_sql(pattern, args, count)
         regex = _pattern_to_regex(pattern)
-        enc = _seq_encoded(args)
+        events = f"flatten(collect_list({args[0]}))" if merge else _seq_events(args)
+        enc = f"array_join(transform(array_sort({events}), s -> s.c), '')"
         if count:
             import re as _re
 
@@ -1948,6 +2053,16 @@ def _seq_timed_sql(pattern: str, args: Args, count: bool) -> str:
 PARAMETRIC: dict[str, Callable[[Args, Args], str]] = {
     "sequenceMatch": _p_sequence(count=False),
     "sequenceCount": _p_sequence(count=True),
+    "sequenceMatchState": lambda p, a: _seq_events(a),
+    "sequenceCountState": lambda p, a: _seq_events(a),
+    "sequenceMatchMerge": _p_sequence(count=False, merge=True),
+    "sequenceCountMerge": _p_sequence(count=True, merge=True),
+    "quantileExactMerge": lambda p, a: _nth_of_sorted(
+        f"array_sort(flatten(collect_list({a[0]})))", [p[0] if p else "0.5"], False
+    ),
+    "quantilesExactMerge": lambda p, a: _nth_of_sorted(
+        f"array_sort(flatten(collect_list({a[0]})))", p, True
+    ),
     # plain quantile(s): the reference SAMPLES above 8192 values
     # (ReservoirSampler.h taus88 seeded 123456) — replayed bit-exact
     # by dialect/reservoir.py; at or below the reservoir bound the
@@ -2021,7 +2136,7 @@ PARAMETRIC: dict[str, Callable[[Args, Args], str]] = {
         else _empty_quantiles(a[0])
     ),
     # -State on parametric quantiles: our state IS the finished value
-    # (finalizeAggregation is then the identity — functions/state.py)
+    # (finalizeAggregation is then the identity)
     "quantileTimingState": lambda p, a: _timing_quantile(a[0], p or ["0.5"]),
     "quantilesTimingState": lambda p, a: _timing_quantile(
         a[0], p, force_array=True
@@ -2150,8 +2265,7 @@ _FOREACH_MERGES = {
 def foreach_combinator(name: str, args: Args) -> str | None:
     """``<agg>ForEach(arr)`` — per-index aggregation across rows.
 
-    SQL twin of functions/aggregates.py:_for_each (reference:
-    AggregateFunctionForEach.h): fold collected arrays with zip_with,
+    The -ForEach combinator (AggregateFunctionForEach.h): fold collected arrays with zip_with,
     which pads the shorter side with NULL.  avgForEach divides the sum
     and count folds; groupArrayForEach transposes into arrays-per-index.
     """
@@ -2253,8 +2367,17 @@ def array_combinator(
     num = "BIGINT"
     if elem_ch_type in ("Float32", "Float64"):
         num = "DOUBLE"
+    sum_form = f"aggregate({arr}, CAST(0 AS {num}), (__a, __x) -> __a + __x)"
+    if elem_ch_type is None:
+        # element type unknown at translate time: fold from the first
+        # element so the accumulator takes the element type (a BIGINT
+        # zero cannot accumulate DOUBLE elements)
+        sum_form = (
+            f"coalesce(aggregate(slice({arr}, 2, size({arr})), "
+            f"element_at({arr}, 1), (__a, __x) -> __a + __x), 0)"
+        )
     forms = {
-        "sum": f"aggregate({arr}, CAST(0 AS {num}), (__a, __x) -> __a + __x)",
+        "sum": sum_form,
         "min": f"array_min({arr})",
         "max": f"array_max({arr})",
         "count": f"size({arr})",

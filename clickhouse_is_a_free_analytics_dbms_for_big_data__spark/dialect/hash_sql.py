@@ -260,7 +260,13 @@ def register_hash_udfs(spark) -> None:
         # golden 00232); CPython's math.exp calls the platform libm.
         import math
 
-        return s.map(lambda v: None if v is None else math.exp(v), na_action="ignore")
+        def exp(v: float) -> float:
+            try:
+                return math.exp(v)
+            except OverflowError:  # libm returns +inf (HUGE_VAL)
+                return math.inf
+
+        return s.map(exp, na_action="ignore")
 
     @pandas_udf(StringType())
     def ch_url_decode(s: pd.Series) -> pd.Series:

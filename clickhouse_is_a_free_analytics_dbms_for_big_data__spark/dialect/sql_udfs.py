@@ -10,9 +10,7 @@ rendered as ::ffff:a.b.c.d.
 
 These are Spark *SQL* UDFs (CREATE TEMPORARY FUNCTION ... RETURN expr,
 Spark 4.x): the body is inlined into the plan by Catalyst, so they stay
-on the codegen'd JVM path — no Python round-trip.  The DataFrame API
-twins live in functions/ip.py; both derive from the same hex-string
-formulation.
+on the codegen'd JVM path — no Python round-trip.
 
 Single-assignment lets are expressed as
 ``element_at(transform(array(v), x -> body), 1)`` so a bound

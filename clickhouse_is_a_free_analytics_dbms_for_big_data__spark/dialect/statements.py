@@ -236,8 +236,8 @@ def _ch_type_inner(toks: list[Token]) -> ColumnDef | None:
         return ColumnDef("", f"ARRAY<{elem.spark_type}>")
     if up == "AGGREGATEFUNCTION":
         # AggregateFunction(f, T...) columns store our typed states
-        # (DataTypes/DataTypeAggregateFunction.h → functions/state.py
-        # state schemas); the -State insert expression produces exactly
+        # (DataTypes/DataTypeAggregateFunction.h → the -State
+        # templates' state schemas); the -State insert expression produces exactly
         # these Spark types and -Merge consumes them.
         fn = args[0][0].text.lower()
         arg_defs = [_ch_type(a) for a in args[1:]]

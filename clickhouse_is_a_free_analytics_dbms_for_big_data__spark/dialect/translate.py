@@ -2623,7 +2623,7 @@ def _render_from(toks: list[Token], ctx: Ctx) -> tuple[str, str | None]:
 def agg_merge_sql(fn: str, col: str) -> str:
     """Merge expression for one AggregateFunction(fn, ...) state column
     (AggregatingSortedBlockInputStream.h merges states per PK; state
-    schemas per functions/state.py)."""
+    schemas per the -State templates in functions_map)."""
     f = fn.lower()
     qc = f"`{col}`"
     if f in ("uniq", "uniqhll12", "uniqcombined"):
@@ -5548,9 +5548,11 @@ def _apply_fn(
         and ctx.group_array_ord is not None
         and len(args) == 1
     ):
+        # NULL values are skipped like any aggregate's NULL rows
+        # (AggregateFunctionNull): the CASE yields a NULL struct
         return (
-            f"transform(array_sort(collect_list(named_struct("
-            f"'o', {ctx.group_array_ord}, 'v', {args[0]}))), "
+            f"transform(array_sort(collect_list(CASE WHEN ({args[0]}) IS NOT NULL "
+            f"THEN named_struct('o', {ctx.group_array_ord}, 'v', {args[0]}) END)), "
             f"__gae -> __gae.v)"
         )
     # dictionary functions (FunctionsExternalDictionaries.cpp) —
@@ -5577,6 +5579,10 @@ def _apply_fn(
         if name == "empty":
             return f"(size({args[0]}) = 0)"
         return f"(size({args[0]}) > 0)"
+    # string length counts BYTES (FunctionsString.cpp LengthImpl);
+    # lengthUTF8 counts code points
+    if name == "length" and len(args) == 1:
+        return f"octet_length({args[0]})"
     # bit-exact uniq family (AggregateFunctionUniq.h): per-row keys
     # hash per UniqVariadicHash.h, counted per each estimator's exact
     # semantics — see _uniq_fn

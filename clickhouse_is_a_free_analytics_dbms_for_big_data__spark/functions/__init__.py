@@ -1,60 +1,14 @@
-"""The reference's scalar-function dialect as Column-expression builders.
+"""Column-side helpers with no CH-SQL twin.
 
-Every public name mirrors a function registered in the reference's
-Functions/FunctionFactory.cpp (SURVEY.md §2.8), implemented as
-compositions of pyspark.sql.functions — JVM-side, whole-stage-codegen
-eligible.  No Python UDFs in this package except where explicitly
-documented (erf/erfc fallback).
+The reference's function library itself (Functions/FunctionFactory.cpp,
+SURVEY.md §2.8) lives in one place: the dialect emitters in
+``dialect/functions_map.py`` plus ``translate._apply_fn``; DataFrame
+callers run CH-SQL text through the translator.  What stays here has
+no SQL emitter of its own:
 
-``FUNCTIONS`` maps reference-dialect names to the builders, for the SQL
-front-end and for introspection parity with the reference's
-system.functions table.
+- ``charset``: the ICU-parity convertCharset Arrow UDF;
+- ``collation``: collation sort keys;
+- ``dictionaries``: external-dictionary sources;
+- ``exact_hash``: bit-exact scalar hash ports behind ``dialect/hash_sql``;
+- ``_util``: Column let-binding helpers for ``pipeline/``.
 """
-
-from . import (
-    aggregates,
-    arithmetic,
-    arrays,
-    conditional,
-    conversion,
-    datetime_fns,
-    hashing,
-    higher_order,
-    ip,
-    json_fns,
-    math_fns,
-    misc,
-    reinterpret,
-    rounding,
-    strings,
-    url,
-)
-
-_MODULES = (
-    aggregates,
-    arithmetic,
-    arrays,
-    conditional,
-    conversion,
-    datetime_fns,
-    hashing,
-    higher_order,
-    ip,
-    json_fns,
-    math_fns,
-    misc,
-    reinterpret,
-    rounding,
-    strings,
-    url,
-)
-
-FUNCTIONS: dict[str, object] = {}
-for _m in _MODULES:
-    for _name in getattr(_m, "__all__", ()):
-        FUNCTIONS[_name] = getattr(_m, _name)
-        globals()[_name] = getattr(_m, _name)
-
-__all__ = ["FUNCTIONS"] + sorted(
-    n for m in _MODULES for n in getattr(m, "__all__", ())
-)

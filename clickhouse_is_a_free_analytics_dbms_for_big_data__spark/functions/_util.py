@@ -1,4 +1,4 @@
-"""Shared helpers for the function dialect."""
+"""Column helpers shared by the pipeline operators."""
 
 from __future__ import annotations
 
@@ -12,13 +12,6 @@ def col_of(x) -> Column:
         return x
     if isinstance(x, str):
         return F.col(x)
-    return F.lit(x)
-
-
-def lit_of(x) -> Column:
-    """Like col_of but strings are literals (for value arguments)."""
-    if isinstance(x, Column):
-        return x
     return F.lit(x)
 
 

@@ -19,9 +19,9 @@ from ..operators import (
     limit_by,
     with_totals,
 )
-from ..functions import aggregates as AGG
 from ..operators.exact_sum import exact_sum_scaled, scaled_long
 from ..sources.catalog import load_tables
+from .dialect_q import _engine
 from .registry import plan_cache as _plan_cache
 from .registry import query
 
@@ -256,14 +256,13 @@ def uniq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def uniq_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
-    exact = F.countDistinct("user_id")
-    approx = AGG.uniq("user_id")
-    return ev.agg(
-        exact.alias("exact_u"),
-        F.when(
-            F.abs(approx - exact) / exact <= 0.03, F.lit(1)
-        ).otherwise(F.lit(0)).alias("hll_within_3pct"),
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT uniqExact(user_id) AS exact_u,
+               if(abs(uniq(user_id) - uniqExact(user_id)) / uniqExact(user_id) <= 0.03,
+                  1, 0) AS hll_within_3pct
+        FROM events
+        """
     )
 
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import state as S
 from ..operators.running import running_accumulate, running_difference
 from ..operators.sequence_match import sequence_count, sequence_match
 from ..sources.mergetree import (
@@ -16,6 +15,7 @@ from ..sources.mergetree import (
     graphite_rollup,
 )
 from .core import _dec, _t
+from .dialect_q import _engine
 from .registry import plan_cache as _plan_cache
 from .registry import query
 
@@ -120,32 +120,24 @@ def collapsing_mergetree(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("mergetree", "state"),
 )
 def aggregating_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
-    # Phase 1 (part-level, the "insert"): states per (user_id, day)
-    parts = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        S.sumState(_dec("value")).alias("sum_state"),
-        S.avgState(F.col("value").cast("double")).alias("avg_state"),
-        S.groupArrayState("event_type").alias("types_state"),
-    )
-    # Phase 2 (merge, the "background merge"): final values per user
-    merged = parts.groupBy("user_id").agg(
-        S.sumMerge("sum_state").cast("double").alias("total"),
-        S.avgMerge("avg_state").alias("avg_v_raw"),
-        F.size(
-            F.array_distinct(S.groupArrayMerge("types_state"))
-        ).cast("bigint").alias("types"),
-    )
-    # avg via decimal-exact sum/count for oracle parity
-    cnts = ev.groupBy("user_id").agg(F.count("value").alias("__n"))
-    return (
-        merged.join(cnts, "user_id")
-        .select(
-            "user_id",
-            "total",
-            (F.col("total") / F.col("__n")).alias("avg_v"),
-            "types",
+    # phase 1 (part-level, the "insert"): states per (user_id, day);
+    # phase 2 (merge, the "background merge"): final values per user.
+    # avg is the decimal-exact sum over the merged count, for oracle
+    # parity
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT user_id, toFloat64(sumMerge(sum_state)) AS total,
+               toFloat64(sumMerge(sum_state)) / countMerge(cnt_state) AS avg_v,
+               toInt64(length(arrayDistinct(groupArrayMerge(types_state)))) AS types
+        FROM (
+            SELECT user_id, toDate(ts) AS day,
+                   sumState(CAST(value AS DECIMAL(18, 2))) AS sum_state,
+                   countState(value) AS cnt_state,
+                   groupArrayState(event_type) AS types_state
+            FROM events GROUP BY user_id, day
         )
-        .orderBy("user_id")
+        GROUP BY user_id ORDER BY user_id
+        """
     )
 
 
@@ -246,18 +238,18 @@ def sequence_match_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("mergetree", "state"),
 )
 def argmax_quantile_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
-    parts = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        S.argMaxState("event_type", F.col("value")).alias("am_state"),
-        S.quantileExactState(F.col("value")).alias("q_state"),
-    )
-    return (
-        parts.groupBy("user_id")
-        .agg(
-            S.argMaxMerge("am_state").alias("top_event"),
-            S.quantileExactMerge("q_state", 0.5).alias("med"),
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT user_id, argMaxMerge(am_state) AS top_event,
+               quantileExactMerge(0.5)(q_state) AS med
+        FROM (
+            SELECT user_id, toDate(ts) AS day,
+                   argMaxState(event_type, value) AS am_state,
+                   quantileExactState(value) AS q_state
+            FROM events GROUP BY user_id, day
         )
-        .orderBy("user_id")
+        GROUP BY user_id ORDER BY user_id
+        """
     )
 
 
@@ -286,18 +278,17 @@ def argmax_quantile_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("funnel", "state"),
 )
 def sequence_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
-    conds = [
-        F.col("event_type") == "view",
-        F.col("event_type") == "purchase",
-    ]
-    parts = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        S.sequenceState(F.col("ts"), conds).alias("seq_state")
-    )
-    return (
-        parts.groupBy("user_id")
-        .agg(S.sequenceCountMerge("(?1).*(?2)", "seq_state").alias("pairs"))
-        .orderBy("user_id")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT user_id, sequenceCountMerge('(?1).*(?2)')(seq_state) AS pairs
+        FROM (
+            SELECT user_id, toDate(ts) AS day,
+                   sequenceCountState('(?1).*(?2)')(
+                       ts, event_type = 'view', event_type = 'purchase') AS seq_state
+            FROM events GROUP BY user_id, day
+        )
+        GROUP BY user_id ORDER BY user_id
+        """
     )
 
 
@@ -429,17 +420,17 @@ def running_accumulate_shim(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("state", "approx"),
 )
 def uniq_state_merge_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
-    parts = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        S.uniqState("user_id").alias("u_state")
-    )
-    merged = parts.agg(S.uniqMerge("u_state").alias("m")).select("m")
-    exact = ev.agg(F.countDistinct("user_id").alias("e")).select("e")
-    return merged.crossJoin(exact).select(
-        F.col("e").alias("exact_u"),
-        F.when(F.abs(F.col("m") - F.col("e")) / F.col("e") <= 0.03, F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("merged_within_3pct"),
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT e AS exact_u, if(abs(m - e) / e <= 0.03, 1, 0) AS merged_within_3pct
+        FROM (
+            SELECT uniqMerge(u_state) AS m, (SELECT uniqExact(user_id) FROM events) AS e
+            FROM (
+                SELECT toDate(ts) AS day, uniqState(user_id) AS u_state
+                FROM events GROUP BY day
+            )
+        )
+        """
     )
 
 

@@ -4,12 +4,8 @@ the test corpus, each with a DuckDB oracle."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.exact_sum import exact_sum_scaled
-from .. import functions as ch
-from ..functions import aggregates as A
-from .core import _dec, _t
+from .dialect_q import _engine
 from .registry import query
 
 
@@ -24,16 +20,12 @@ from .registry import query
     tags=("functions", "datetime"),
 )
 def fn_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            ch.toYear("o_orderdate").alias("y"), ch.toMonth("o_orderdate").alias("m")
-        )
-        .agg(
-            A.count_().alias("cnt"),
-            exact_sum_scaled(F.col("o_totalprice")).cast("double").alias("revenue"),
-        )
-        .orderBy("y", "m")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT toYear(o_orderdate) AS y, toMonth(o_orderdate) AS m, count() AS cnt,
+               toFloat64(sum(CAST(o_totalprice AS DECIMAL(18, 2)))) AS revenue
+        FROM orders GROUP BY y, m ORDER BY y, m
+        """
     )
 
 
@@ -51,20 +43,16 @@ def fn_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "datetime"),
 )
 def fn_day_of_week_monday(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    return (
-        orders.filter(
-            (ch.toYear("o_orderdate") == 1997)
-            & (F.weekofyear("o_orderdate") == 30)
-        )
-        .groupBy(
-            ch.toDayOfWeek("o_orderdate").alias("dow"),
-            F.date_format(ch.toMonday("o_orderdate"), "yyyy-MM-dd").alias(
-                "monday_sample"
-            ),
-        )
-        .agg(A.count_().alias("cnt"))
-        .orderBy("dow")
+    # ISO week number: the reference has no toISOWeek, so the filter
+    # calls Spark's weekofyear through the translator
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT toDayOfWeek(o_orderdate) AS dow,
+               toString(toMonday(o_orderdate)) AS monday_sample, count() AS cnt
+        FROM orders
+        WHERE toYear(o_orderdate) = 1997 AND weekofyear(o_orderdate) = 30
+        GROUP BY dow, monday_sample ORDER BY dow
+        """
     )
 
 
@@ -81,16 +69,13 @@ def fn_day_of_week_monday(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "string"),
 )
 def fn_string_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (part,) = _t(spark, sf_dir, "part")
-    return (
-        part.filter(ch.position("p_name", "red") > 0)
-        .groupBy(
-            ch.upper("p_brand").alias("brand_u"),
-            ch.length("p_name").alias("name_len"),
-            ch.substring("p_type", 1, 5).alias("type5"),
-        )
-        .agg(A.count_().alias("cnt"))
-        .orderBy("brand_u", "name_len", "type5")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT upper(p_brand) AS brand_u, length(p_name) AS name_len,
+               substring(p_type, 1, 5) AS type5, count() AS cnt
+        FROM part WHERE position(p_name, 'red') > 0
+        GROUP BY brand_u, name_len, type5 ORDER BY brand_u, name_len, type5
+        """
     )
 
 
@@ -109,22 +94,16 @@ def fn_string_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "conditional"),
 )
 def fn_conditional_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            ch.transform(
-                "o_orderstatus", ["F", "O"], ["finished", "open"], "other"
-            ).alias("status_label"),
-            ch.multiIf(
-                F.col("o_totalprice") > 200000,
-                "big",
-                F.col("o_totalprice") > 100000,
-                "mid",
-                "small",
-            ).alias("size_label"),
-        )
-        .agg(A.count_().alias("cnt"))
-        .orderBy("status_label", "size_label")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT transform(o_orderstatus, ['F', 'O'], ['finished', 'open'], 'other')
+                   AS status_label,
+               multiIf(o_totalprice > 200000, 'big',
+                       o_totalprice > 100000, 'mid', 'small') AS size_label,
+               count() AS cnt
+        FROM orders GROUP BY status_label, size_label
+        ORDER BY status_label, size_label
+        """
     )
 
 
@@ -142,15 +121,13 @@ def fn_conditional_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "json"),
 )
 def fn_visit_param(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
-    k = ch.visitParamExtractUInt("props", "k")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.sum(k).cast("bigint").alias("sum_k"),
-            A.countIf(k > 50).alias("cnt_big"),
-        )
-        .orderBy("event_type")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT event_type,
+               toInt64(sum(visitParamExtractUInt(props, 'k'))) AS sum_k,
+               countIf(visitParamExtractUInt(props, 'k') > 50) AS cnt_big
+        FROM events GROUP BY event_type ORDER BY event_type
+        """
     )
 
 
@@ -168,16 +145,13 @@ def fn_visit_param(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "higher_order"),
 )
 def fn_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (docs,) = _t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    return (
-        docs.select(
-            "doc_id",
-            ch.arrayCount(lambda x: F.length(x) > 4, toks).alias("n_long"),
-            ch.arraySum(toks, lambda x: F.length(x)).alias("sum_len"),
-        )
-        .orderBy("doc_id")
-        .limit(100)
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT doc_id,
+               arrayCount(x -> lengthUTF8(x) > 4, splitByChar(' ', text)) AS n_long,
+               arraySum(x -> lengthUTF8(x), splitByChar(' ', text)) AS sum_len
+        FROM documents ORDER BY doc_id LIMIT 100
+        """
     )
 
 
@@ -195,22 +169,16 @@ def fn_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "arithmetic"),
 )
 def fn_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy(
-            ch.intDiv(F.col("l_quantity").cast("bigint"), 10).alias("qty_bucket"),
-            (F.col("l_orderkey") % 7).alias("key_mod"),
-        )
-        .agg(
-            A.count_().alias("cnt"),
-            F.min(ch.least(_dec("l_discount"), _dec("l_tax")))
-            .cast("double")
-            .alias("min_rate"),
-            F.max(ch.greatest(_dec("l_discount"), _dec("l_tax")))
-            .cast("double")
-            .alias("max_rate"),
-        )
-        .orderBy("qty_bucket", "key_mod")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT intDiv(toInt64(l_quantity), 10) AS qty_bucket,
+               l_orderkey % 7 AS key_mod, count() AS cnt,
+               toFloat64(min(least(CAST(l_discount AS DECIMAL(18, 2)),
+                                   CAST(l_tax AS DECIMAL(18, 2))))) AS min_rate,
+               toFloat64(max(greatest(CAST(l_discount AS DECIMAL(18, 2)),
+                                      CAST(l_tax AS DECIMAL(18, 2))))) AS max_rate
+        FROM lineitem GROUP BY qty_bucket, key_mod ORDER BY qty_bucket, key_mod
+        """
     )
 
 
@@ -232,23 +200,16 @@ def fn_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "url"),
 )
 def fn_url_parsing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (docs,) = _t(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://"),
-        F.col("source"),
-        F.lit(".example.com/"),
-        F.col("lang"),
-        F.lit("/doc/"),
-        F.col("doc_id").cast("string"),
-        F.lit("?ref=feed#top"),
-    )
-    return (
-        docs.select(
-            ch.protocol(url).alias("proto"), ch.domain(url).alias("host")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT protocol(url) AS proto, domain(url) AS host, count() AS cnt
+        FROM (
+            SELECT concat('https://', source, '.example.com/', lang, '/doc/',
+                          toString(doc_id), '?ref=feed#top') AS url
+            FROM documents
         )
-        .groupBy("proto", "host")
-        .agg(A.count_().alias("cnt"))
-        .orderBy("host")
+        GROUP BY proto, host ORDER BY host
+        """
     )
 
 
@@ -272,21 +233,20 @@ def fn_url_parsing(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "aggregate"),
 )
 def fn_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
-    qq = A.quantilesExact("l_extendedprice", 0.5, 0.9)
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            qq.alias("qq"),
-            F.round(A.stddevSamp("l_extendedprice"), 4).alias("sd"),
+    # the oracle interpolates (quantile_cont) where the reference's
+    # quantileExact takes the nth element, so both levels come from
+    # Spark's percentile over one value buffer
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT l_returnflag, round(qq[1], 4) AS p50, round(qq[2], 4) AS p90,
+               round(sd_raw, 4) AS sd
+        FROM (
+            SELECT l_returnflag, percentile(l_extendedprice, [0.5, 0.9]) AS qq,
+                   stddevSamp(l_extendedprice) AS sd_raw
+            FROM lineitem GROUP BY l_returnflag
         )
-        .select(
-            "l_returnflag",
-            F.round(F.col("qq")[0], 4).alias("p50"),
-            F.round(F.col("qq")[1], 4).alias("p90"),
-            "sd",
-        )
-        .orderBy("l_returnflag")
+        ORDER BY l_returnflag
+        """
     )
 
 
@@ -307,13 +267,11 @@ def fn_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "ip"),
 )
 def fn_ip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
-    ipnum = F.lit(167772160) + F.col("user_id") * 997
-    return (
-        ev.select(ch.IPv4NumToString(ipnum).alias("ip"))
-        .groupBy("ip")
-        .agg(A.count_().alias("cnt"))
-        .orderBy("ip")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT IPv4NumToString(167772160 + user_id * 997) AS ip, count() AS cnt
+        FROM events GROUP BY ip ORDER BY ip
+        """
     )
 
 
@@ -329,11 +287,11 @@ def fn_ip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "rounding"),
 )
 def fn_rounding_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(ch.roundToExp2(F.col("value")).alias("exp2_bucket"))
-        .agg(A.count_().alias("cnt"))
-        .orderBy("exp2_bucket")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT roundToExp2(value) AS exp2_bucket, count() AS cnt
+        FROM events GROUP BY exp2_bucket ORDER BY exp2_bucket
+        """
     )
 
 
@@ -348,13 +306,10 @@ def fn_rounding_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "aggregate"),
 )
 def fn_group_array_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (nat,) = _t(spark, sf_dir, "nation")
-    return (
-        nat.groupBy("n_regionkey")
-        .agg(
-            F.array_join(F.sort_array(A.groupArray("n_name")), "|").alias(
-                "nations"
-            )
-        )
-        .orderBy("n_regionkey")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT n_regionkey,
+               arrayStringConcat(arraySort(groupArray(n_name)), '|') AS nations
+        FROM nation GROUP BY n_regionkey ORDER BY n_regionkey
+        """
     )

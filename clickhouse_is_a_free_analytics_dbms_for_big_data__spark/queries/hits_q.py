@@ -633,8 +633,7 @@ def hits_q18(spark, sf_dir):
     WHERE UserID64 = 12345678901234567890 ORDER BY uid64 LIMIT 100
     """,
     "benchmark Q20: UInt64 literal above Int64 max — full-range path via "
-    "Decimal(20,0) (queries.sql:20, SURVEY §7 hard part; "
-    "functions/conversion.py toUInt64Full)",
+    "Decimal(20,0) (queries.sql:20, SURVEY §7 hard part)",
 )
 @_plan_cache
 def hits_q20(spark, sf_dir):
@@ -777,7 +776,7 @@ def hits_q26(spark, sf_dir):
     GROUP BY key HAVING COUNT(*) > 100 ORDER BY l DESC, key LIMIT 25
     """,
     "benchmark Q29: domainWithoutWWW rollup with HAVING (queries.sql:29; "
-    "threshold scaled, any pinned to min; functions/url.py domainWithoutWWW)",
+    "threshold scaled, any pinned to min)",
 )
 @_plan_cache
 def hits_q29(spark, sf_dir):
@@ -1230,9 +1229,14 @@ def _stored_plan_cache(fn):
             if cached is not None:
                 return cached
         out = fn(spark, sf_dir)  # ensures/rebuilds the store
+        sig = _store_sig()
+        if sig is None:
+            # no store signature: the lookup above would never read
+            # such an entry back, so it is not kept
+            return out
         if len(wrap._plans) > 64:
             wrap._plans.clear()
-        wrap._plans[base + (_store_sig(),)] = out
+        wrap._plans[base + (sig,)] = out
         return out
 
     wrap._plans = {}

@@ -6,9 +6,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.arrays import arrayReduce
-from ..functions.reinterpret import reinterpretAsString, reinterpretAsUInt32
 from ..sources.catalog import load_tables
+from .dialect_q import _engine
 from .registry import query
 
 
@@ -41,9 +40,9 @@ def _t(spark: SparkSession, sf_dir: str, *names: str):
     "functions run INTERPRETED per element (no codegen), measured "
     "4.4 s vs 0.3 s here on ~200-token docs, and quadratic blowup on "
     "the long documents a 100 TB corpus contains.  The array-side "
-    "operator (functions/arrays.arrayEnumerateUniq) stays for short "
-    "arrays and the dialect; values are identical (the oracle always "
-    "computed it relationally).",
+    "form (the dialect's arrayEnumerateUniq) stays for short arrays; "
+    "values are identical (the oracle always computed it "
+    "relationally).",
     tags=("functions", "array"),
 )
 def fn_enumerate_uniq_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,27 +80,24 @@ def fn_enumerate_uniq_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "array"),
 )
 def fn_array_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    per_key = (
-        orders.groupBy("o_custkey")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("o_orderkey", "o_totalprice"))
-            ).alias("sorted_pairs")
+    # (orderkey, price) tuples sorted by key: the array keeps the oracle's
+    # ORDER BY o_orderkey, so the float sum adds in the same order
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT o_custkey,
+               toFloat64(arrayReduce('sum', prices)) AS total,
+               toFloat64(arrayReduce('max', prices)) AS biggest,
+               toInt64(arrayReduce('count', prices)) AS n
+        FROM (
+            SELECT o_custkey,
+                   arrayMap(t -> tupleElement(t, 2),
+                            arraySort(groupArray(tuple(o_orderkey, o_totalprice))))
+                       AS prices
+            FROM orders GROUP BY o_custkey
         )
-        .withColumn(
-            "prices", F.transform("sorted_pairs", lambda s: s["o_totalprice"])
-        )
-    )
-    return (
-        per_key.filter(F.col("o_custkey") % 50 == 0)
-        .select(
-            "o_custkey",
-            arrayReduce("sum", "prices").alias("total"),
-            arrayReduce("max", "prices").cast("double").alias("biggest"),
-            arrayReduce("count", "prices").cast("long").alias("n"),
-        )
-        .orderBy("o_custkey")
+        WHERE o_custkey % 50 = 0
+        ORDER BY o_custkey
+        """
     )
 
 
@@ -118,13 +114,14 @@ def fn_array_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "reinterpret"),
 )
 def fn_reinterpret_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (nation,) = _t(spark, sf_dir, "nation")
-    code = (F.lit(65) + F.col("n_nationkey") % 26).cast("long")
-    return nation.select(
-        "n_nationkey",
-        reinterpretAsString(code).alias("s"),
-        reinterpretAsUInt32(reinterpretAsString(code)).cast("long").alias("back"),
-    ).orderBy("n_nationkey")
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT n_nationkey, toString(reinterpretAsString(code)) AS s,
+               toInt64(reinterpretAsUInt32(reinterpretAsString(code))) AS back
+        FROM (SELECT n_nationkey, toInt64(65 + n_nationkey % 26) AS code FROM nation)
+        ORDER BY n_nationkey
+        """
+    )
 
 
 @query(
@@ -153,30 +150,20 @@ def fn_reinterpret_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "aggregate", "combinator"),
 )
 def fn_sum_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.aggregates import sumForEach
-
-    (li,) = _t(spark, sf_dir, "lineitem")
-    arr = F.slice(
-        F.array(
-            F.col("l_quantity").cast("long"),
-            F.col("l_linenumber").cast("long"),
-            (F.col("l_partkey") % 10).cast("long"),
-        ),
-        F.lit(1),
-        (F.col("l_linenumber") % 3 + 1).cast("int"),
-    )
-    return (
-        li.select("l_returnflag", arr.alias("arr"))
-        .groupBy("l_returnflag")
-        .agg(sumForEach(F.col("arr")).alias("sums_raw"))
-        .select(
-            "l_returnflag",
-            F.array_join(
-                F.expr("transform(sums_raw, x -> cast(cast(x as bigint) as string))"),
-                ",",
-            ).alias("sums"),
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT l_returnflag,
+               arrayStringConcat(arrayMap(x -> toString(toInt64(x)), sumForEach(arr)), ',')
+                   AS sums
+        FROM (
+            SELECT l_returnflag,
+                   arraySlice([toInt64(l_quantity), toInt64(l_linenumber),
+                               toInt64(l_partkey % 10)],
+                              1, toInt32(l_linenumber % 3 + 1)) AS arr
+            FROM lineitem
         )
-        .orderBy("l_returnflag")
+        GROUP BY l_returnflag ORDER BY l_returnflag
+        """
     )
 
 
@@ -195,15 +182,11 @@ def fn_sum_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "aggregate"),
 )
 def fn_quantile_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.aggregates import quantileExactWeighted
-
-    (li,) = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            quantileExactWeighted(
-                F.col("l_quantity").cast("long"), F.col("l_linenumber")
-            ).alias("q")
-        )
-        .orderBy("l_returnflag")
+    # the oracle interpolates, the reference's quantileExactWeighted
+    # does not: Spark's percentile(x, p, frequency) through the translator
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT l_returnflag, percentile(toInt64(l_quantity), 0.5, l_linenumber) AS q
+        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+        """
     )

@@ -9,8 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions import (
-    state as S,
+from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect import (
+    ChEngine,
 )
 from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.operators.sequence_match import (
     sequence_count,
@@ -66,20 +66,24 @@ def test_summing_sums_metrics_keeps_first_other(spark):
 
 
 def test_uniq_state_merge_accuracy(spark):
-    df = spark.createDataFrame(
+    spark.createDataFrame(
         [(i % 5, i % 1000) for i in range(5000)], "part int, uid int"
-    )
-    states = df.groupBy("part").agg(S.uniqState("uid").alias("st"))
-    est = states.agg(S.uniqMerge("st").alias("u")).first()["u"]
+    ).createOrReplaceTempView("uniq_state_t")
+    est = ChEngine(spark).sql(
+        "SELECT uniqMerge(st) AS u FROM "
+        "(SELECT part, uniqState(uid) AS st FROM uniq_state_t GROUP BY part)"
+    ).first()["u"]
     assert abs(est - 1000) / 1000 < 0.05  # HLL within 5%
 
 
 def test_avg_state_merge_exact(spark):
-    df = spark.createDataFrame(
+    spark.createDataFrame(
         [(i % 3, float(i)) for i in range(100)], "part int, v double"
-    )
-    states = df.groupBy("part").agg(S.avgState("v").alias("st"))
-    merged = states.agg(S.avgMerge("st").alias("a")).first()["a"]
+    ).createOrReplaceTempView("avg_state_t")
+    merged = ChEngine(spark).sql(
+        "SELECT avgMerge(st) AS a FROM "
+        "(SELECT part, avgState(v) AS st FROM avg_state_t GROUP BY part)"
+    ).first()["a"]
     assert merged == sum(range(100)) / 100
 
 

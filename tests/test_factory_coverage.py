@@ -124,7 +124,7 @@ DYNAMIC = {
     "in", "notIn", "globalIn", "globalNotIn",      # IN-operator forms
     "caseWithExpr", "caseWithoutExpr",             # CASE parse forms
     "dictGetString", "dictGetStringOrDefault",     # dictGet* prefix
-    "IPv6NumToString", "IPv6StringToNum", "cutIPv6",  # ip.py Columns
+    "IPv6NumToString", "IPv6StringToNum", "cutIPv6",  # SQL UDFs by name
 }
 
 #: reasoned skips (SURVEY §2.8): embedded Yandex dictionaries need
@@ -182,3 +182,35 @@ def test_scalar_factory_names_covered():
         if n not in quoted and n not in DYNAMIC and n not in SKIPPED
     )
     assert not uncovered, f"unmapped reference functions: {uncovered}"
+
+
+def test_functions_package_has_no_dialect_twin():
+    """One function library: the dialect emitters are the only
+    implementation of each reference function name, so no module under
+    functions/ may export a name that functions_map also emits
+    (case-insensitive)."""
+    import importlib
+    import pkgutil
+
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark import (
+        functions as pkg,
+    )
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect.functions_map import (
+        PARAMETRIC,
+        SIMPLE,
+        TEMPLATES,
+    )
+
+    emitted = {n.lower() for d in (SIMPLE, TEMPLATES, PARAMETRIC) for n in d}
+    twins = []
+    for info in pkgutil.iter_modules(pkg.__path__):
+        mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
+        names = getattr(mod, "__all__", None) or [
+            n for n, v in vars(mod).items()
+            if not n.startswith("_") and callable(v)
+            and getattr(v, "__module__", None) == mod.__name__
+        ]
+        twins += [
+            f"{info.name}.{n}" for n in names if n.lower().rstrip("_") in emitted
+        ]
+    assert not twins, f"functions/ re-implements dialect names: {twins}"

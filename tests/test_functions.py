@@ -1,380 +1,422 @@
-"""Behavior tests for the scalar-function dialect (SURVEY.md §2.8).
+"""Behavior tests for the scalar- and aggregate-function dialect
+(SURVEY.md §2.8), run as CH-SQL through ChEngine.
 
 Style mirrors the reference's golden functional tests
 (dbms/tests/queries/0_stateless): tiny literal inputs, exact expected
-outputs — but as assertions, not byte-diffs.
+outputs — but as assertions, not byte-diffs.  Each test is a table of
+(CH-SQL expression, expected value) rows evaluated in one SELECT.
 """
 
 from __future__ import annotations
 
+import datetime
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
-import clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions as ch
+from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect import (
+    ChEngine,
+)
 
 
 @pytest.fixture(scope="module")
-def one(spark):
-    return spark.range(1)
+def eng(spark):
+    return ChEngine(spark)
 
 
-def val(df, col):
-    return df.select(col.alias("v")).first()["v"]
+def _same(got, want) -> bool:
+    if callable(want):
+        return bool(want(got))
+    if isinstance(want, float) and not isinstance(got, bool):
+        return got is not None and math.isclose(float(got), want, rel_tol=1e-12)
+    if isinstance(got, (datetime.date, datetime.datetime)):
+        return str(got) == want
+    if isinstance(got, (bytes, bytearray)):
+        return bytes(got) == want
+    return got == want
+
+
+def check(eng, rows, src: str = "") -> None:
+    """Evaluate every row's expression as one column of one SELECT."""
+    cols = ", ".join(f"{expr} AS c{i}" for i, (expr, _) in enumerate(rows))
+    got = eng.sql(f"SELECT {cols} {src}").first()
+    for i, (expr, want) in enumerate(rows):
+        assert _same(got[f"c{i}"], want), (expr, got[f"c{i}"], want)
+
+
+def close(want: float, tol: float):
+    return lambda got: got is not None and abs(float(got) - want) < tol
 
 
 # -- arithmetic -------------------------------------------------------------
 
 
-def test_int_div(one):
-    assert val(one, ch.intDiv(F.lit(7), 2)) == 3
-    assert val(one, ch.intDiv(F.lit(-7), 2)) == -3  # trunc toward zero
-    assert val(one, ch.intDivOrZero(F.lit(7), 0)) == 0
+def test_int_div(eng):
+    check(eng, [
+        ("intDiv(7, 2)", 3),
+        ("intDiv(-7, 2)", -3),  # trunc toward zero
+        ("intDivOrZero(7, 0)", 0),
+    ])
 
 
-def test_modulo_negate_abs(one):
-    assert val(one, ch.modulo(F.lit(7), 3)) == 1
-    assert val(one, ch.negate(F.lit(5))) == -5
-    assert val(one, ch.abs_(F.lit(-5))) == 5
+def test_modulo_negate_abs(eng):
+    check(eng, [("modulo(7, 3)", 1), ("negate(5)", -5), ("abs(-5)", 5)])
 
 
-def test_bit_ops(one):
-    assert val(one, ch.bitAnd(F.lit(6), 3)) == 2
-    assert val(one, ch.bitOr(F.lit(6), 3)) == 7
-    assert val(one, ch.bitXor(F.lit(6), 3)) == 5
-    assert val(one, ch.bitShiftLeft(F.lit(1), 4)) == 16
+def test_bit_ops(eng):
+    check(eng, [
+        ("bitAnd(6, 3)", 2),
+        ("bitOr(6, 3)", 7),
+        ("bitXor(6, 3)", 5),
+        ("bitShiftLeft(1, 4)", 16),
+    ])
 
 
-def test_xor_logical(one):
-    assert val(one, ch.xor(F.lit(1), F.lit(0))) is True
-    assert val(one, ch.xor(F.lit(1), F.lit(1))) is False
+def test_xor_logical(eng):
+    check(eng, [("xor(1, 0)", 1), ("xor(1, 1)", 0)])
 
 
 # -- strings ----------------------------------------------------------------
 
 
-def test_string_basics(one):
-    assert val(one, ch.length(F.lit("héllo"))) == 6  # bytes
-    assert val(one, ch.lengthUTF8(F.lit("héllo"))) == 5  # chars
-    assert val(one, ch.empty(F.lit(""))) is True
-    assert val(one, ch.notEmpty(F.lit("x"))) is True
-    assert val(one, ch.reverse(F.lit("abc"))) == "cba"
-    assert val(one, ch.concat(F.lit("a"), "b", F.lit("c"))) == "abc"
-    assert val(one, ch.substring(F.lit("hello"), 2, 3)) == "ell"
-    assert val(one, ch.appendTrailingCharIfAbsent(F.lit("dir"), "/")) == "dir/"
-    assert val(one, ch.appendTrailingCharIfAbsent(F.lit("dir/"), "/")) == "dir/"
+def test_string_basics(eng):
+    check(eng, [
+        ("length('héllo')", 6),  # bytes
+        ("lengthUTF8('héllo')", 5),  # chars
+        ("empty('')", 1),
+        ("notEmpty('x')", 1),
+        ("reverse('abc')", "cba"),
+        ("concat('a', 'b', 'c')", "abc"),
+        ("substring('hello', 2, 3)", "ell"),
+        ("appendTrailingCharIfAbsent('dir', '/')", "dir/"),
+        ("appendTrailingCharIfAbsent('dir/', '/')", "dir/"),
+    ])
 
 
-def test_string_search(one):
-    assert val(one, ch.position(F.lit("hello"), "ll")) == 3
-    assert val(one, ch.position(F.lit("hello"), "zz")) == 0
-    assert val(one, ch.positionCaseInsensitive(F.lit("HeLLo"), "ll")) == 3
-    assert val(one, ch.match(F.lit("abc123"), r"\d+")) is True
-    assert val(one, ch.like(F.lit("hello"), "he%")) is True
-    assert val(one, ch.extract(F.lit("v=42;"), r"v=(\d+)")) == "42"
+def test_string_search(eng):
+    check(eng, [
+        ("position('hello', 'll')", 3),
+        ("position('hello', 'zz')", 0),
+        ("positionCaseInsensitive('HeLLo', 'll')", 3),
+        ("match('abc123', '\\\\d+')", 1),
+        ("like('hello', 'he%')", 1),
+        ("extract('v=42;', 'v=(\\\\d+)')", "42"),
+    ])
 
 
-def test_replace(one):
-    assert val(one, ch.replaceOne(F.lit("aaa"), "a", "b")) == "baa"
-    assert val(one, ch.replaceAll(F.lit("aaa"), "a", "b")) == "bbb"
-    assert val(one, ch.replaceRegexpOne(F.lit("a1a2"), r"\d", "x")) == "axa2"
-    assert val(one, ch.replaceRegexpAll(F.lit("a1a2"), r"\d", "x")) == "axax"
-    assert val(one, ch.replaceOne(F.lit("abc"), "zz", "x")) == "abc"
+def test_replace(eng):
+    check(eng, [
+        ("replaceOne('aaa', 'a', 'b')", "baa"),
+        ("replaceAll('aaa', 'a', 'b')", "bbb"),
+        ("replaceRegexpOne('a1a2', '\\\\d', 'x')", "axa2"),
+        ("replaceRegexpAll('a1a2', '\\\\d', 'x')", "axax"),
+        ("replaceOne('abc', 'zz', 'x')", "abc"),
+    ])
 
 
-def test_split(one):
-    assert val(one, ch.splitByChar(",", F.lit("a,b,,c"))) == ["a", "b", "", "c"]
-    assert val(one, ch.alphaTokens(F.lit("ab12cd ef"))) == ["ab", "cd", "ef"]
-    assert val(one, ch.arrayStringConcat(F.array(F.lit("a"), F.lit("b")), "-")) == "a-b"
+def test_split(eng):
+    check(eng, [
+        ("splitByChar(',', 'a,b,,c')", ["a", "b", "", "c"]),
+        ("alphaTokens('ab12cd ef')", ["ab", "cd", "ef"]),
+        ("arrayStringConcat(['a', 'b'], '-')", "a-b"),
+    ])
 
 
 # -- datetime ---------------------------------------------------------------
 
 
-def test_datetime_parts(one):
-    ts = F.lit("2024-03-15 13:45:30").cast("timestamp")
-    assert val(one, ch.toYear(ts)) == 2024
-    assert val(one, ch.toMonth(ts)) == 3
-    assert val(one, ch.toDayOfMonth(ts)) == 15
-    assert val(one, ch.toDayOfWeek(ts)) == 5  # Friday, Monday=1
-    assert val(one, ch.toHour(ts)) == 13
-    assert val(one, ch.toMinute(ts)) == 45
-    assert val(one, ch.toSecond(ts)) == 30
+def test_datetime_parts(eng):
+    ts = "toDateTime('2024-03-15 13:45:30')"
+    check(eng, [
+        (f"toYear({ts})", 2024),
+        (f"toMonth({ts})", 3),
+        (f"toDayOfMonth({ts})", 15),
+        (f"toDayOfWeek({ts})", 5),  # Friday, Monday=1
+        (f"toHour({ts})", 13),
+        (f"toMinute({ts})", 45),
+        (f"toSecond({ts})", 30),
+    ])
 
 
-def test_datetime_truncation(one):
-    ts = F.lit("2024-03-15 13:45:30").cast("timestamp")
-    assert str(val(one, ch.toMonday(ts))) == "2024-03-11"
-    assert str(val(one, ch.toStartOfMonth(ts))) == "2024-03-01"
-    assert str(val(one, ch.toStartOfQuarter(ts))) == "2024-01-01"
-    assert str(val(one, ch.toStartOfFiveMinute(ts))) == "2024-03-15 13:45:00"
-    assert str(val(one, ch.timeSlot(ts))) == "2024-03-15 13:30:00"
-    assert val(one, ch.toRelativeDayNum(F.lit("1970-01-10").cast("date"))) == 9
+def test_datetime_truncation(eng):
+    ts = "toDateTime('2024-03-15 13:45:30')"
+    check(eng, [
+        (f"toMonday({ts})", "2024-03-11"),
+        (f"toStartOfMonth({ts})", "2024-03-01"),
+        (f"toStartOfQuarter({ts})", "2024-01-01"),
+        (f"toStartOfFiveMinute({ts})", "2024-03-15 13:45:00"),
+        (f"timeSlot({ts})", "2024-03-15 13:30:00"),
+        ("toRelativeDayNum(toDate('1970-01-10'))", 9),
+    ])
 
 
 # -- conversion -------------------------------------------------------------
 
 
-def test_conversions(one):
-    assert val(one, ch.toInt32(F.lit("42"))) == 42
-    assert val(one, ch.toInt32OrZero(F.lit("oops"))) == 0
-    assert val(one, ch.toFloat64OrZero(F.lit("1.5"))) == 1.5
-    assert val(one, ch.toString(F.lit(42))) == "42"
-    assert str(val(one, ch.toDate(F.lit("2024-03-15 13:00:00")))) == "2024-03-15"
-    assert val(one, ch.toUnixTimestamp(F.lit("1970-01-01 00:01:00"))) == 60
+def test_conversions(eng):
+    check(eng, [
+        ("toInt32('42')", 42),
+        ("toInt32OrZero('oops')", 0),
+        ("toFloat64OrZero('1.5')", 1.5),
+        ("toString(42)", "42"),
+        ("toDate(toDateTime('2024-03-15 13:00:00'))", "2024-03-15"),
+        ("toUnixTimestamp(toDateTime('1970-01-01 00:01:00'))", 60),
+    ])
 
 
 # -- rounding ---------------------------------------------------------------
 
 
-def test_rounding(one):
-    assert val(one, ch.round_(F.lit(2.5))) == 2.0  # banker's
-    assert val(one, ch.round_(F.lit(3.5))) == 4.0
-    assert val(one, ch.roundToExp2(F.lit(100))) == 64
-    assert val(one, ch.roundToExp2(F.lit(0))) == 0
-    assert val(one, ch.roundDuration(F.lit(95))) == 60
-    assert val(one, ch.roundAge(F.lit(30))) == 25
+def test_rounding(eng):
+    check(eng, [
+        ("round(2.5)", 2.0),  # banker's
+        ("round(3.5)", 4.0),
+        ("roundToExp2(100)", 64),
+        ("roundToExp2(0)", 0),
+        ("roundDuration(95)", 60),
+        ("roundAge(30)", 25),
+    ])
 
 
 # -- conditional / null -----------------------------------------------------
 
 
-def test_conditional(one):
-    assert val(one, ch.if_(F.lit(True), "a", "b")) == "a"
-    assert (
-        val(one, ch.multiIf(F.lit(False), "a", F.lit(True), "b", "c")) == "b"
-    )
-    assert val(one, ch.caseWithExpr(F.lit(2), 1, "one", 2, "two", "other")) == "two"
-    assert val(one, ch.ifNull(F.lit(None).cast("int"), 7)) == 7
-    assert val(one, ch.nullIf(F.lit(5), 5)) is None
+def test_conditional(eng):
+    check(eng, [
+        ("if(1, 'a', 'b')", "a"),
+        ("multiIf(0, 'a', 1, 'b', 'c')", "b"),
+        ("caseWithExpr(2, 1, 'one', 2, 'two', 'other')", "two"),
+        ("ifNull(NULL, 7)", 7),
+        ("nullIf(5, 5)", None),
+    ])
 
 
 # -- arrays -----------------------------------------------------------------
 
 
-def test_array_element(one):
-    arr = F.array(F.lit(10), F.lit(20), F.lit(30))
-    assert val(one, ch.arrayElement(arr, 1)) == 10
-    assert val(one, ch.arrayElement(arr, -1)) == 30
-    assert val(one, ch.arrayElement(arr, 99)) == 0  # type default, not NULL
-    assert val(one, ch.arrayElementOrNull(arr, 99)) is None
+def test_array_element(eng):
+    check(eng, [
+        ("arrayElement([10, 20, 30], 1)", 10),
+        ("arrayElement([10, 20, 30], -1)", 30),
+        ("arrayElement([10, 20, 30], 99)", 0),  # type default, not NULL
+    ])
 
 
-def test_array_basics(one):
-    arr = F.array(F.lit(1), F.lit(2), F.lit(2), F.lit(3))
-    assert val(one, ch.has(arr, 2)) is True
-    assert val(one, ch.indexOf(arr, 2)) == 2
-    assert val(one, ch.indexOf(arr, 9)) == 0
-    assert val(one, ch.countEqual(arr, 2)) == 2
-    assert val(one, ch.arrayUniq(arr)) == 3
-    assert val(one, ch.arrayEnumerate(arr)) == [1, 2, 3, 4]
-    assert val(one, ch.range_(3)) == [0, 1, 2]
-    assert val(one, ch.range_(0)) == []
-    assert val(one, ch.arraySlice(arr, 2, 2)) == [2, 2]
-    assert val(one, ch.arrayResize(arr, 6, 0)) == [1, 2, 2, 3, 0, 0]
+def test_array_basics(eng):
+    arr = "[1, 2, 2, 3]"
+    check(eng, [
+        (f"has({arr}, 2)", 1),
+        (f"indexOf({arr}, 2)", 2),
+        (f"indexOf({arr}, 9)", 0),
+        (f"countEqual({arr}, 2)", 2),
+        (f"arrayUniq({arr})", 3),
+        (f"arrayEnumerate({arr})", [1, 2, 3, 4]),
+        ("range(3)", [0, 1, 2]),
+        ("range(0)", []),
+        (f"arraySlice({arr}, 2, 2)", [2, 2]),
+        (f"arraySlice({arr}, 3)", [2, 3]),
+    ])
 
 
-def test_higher_order(one):
-    arr = F.array(F.lit(3), F.lit(1), F.lit(2))
-    assert val(one, ch.arrayMap(lambda x: x * 2, arr)) == [6, 2, 4]
-    assert val(one, ch.arrayFilter(lambda x: x > 1, arr)) == [3, 2]
-    assert val(one, ch.arrayCount(lambda x: x > 1, arr)) == 2
-    assert val(one, ch.arrayExists(lambda x: x == 2, arr)) is True
-    assert val(one, ch.arrayAll(lambda x: x > 0, arr)) is True
-    assert val(one, ch.arraySum(arr)) == 6.0
-    assert val(one, ch.arraySort(arr)) == [1, 2, 3]
-    assert val(one, ch.arrayReverseSort(arr)) == [3, 2, 1]
-    assert val(one, ch.arrayFirst(lambda x: x > 1, arr)) == 3
-    assert val(one, ch.arrayFirstIndex(lambda x: x == 2, arr)) == 3
-    assert val(one, ch.arrayFirstIndex(lambda x: x == 9, arr)) == 0
-    assert val(one, ch.arrayCumSum(arr)) == [3.0, 4.0, 6.0]
+def test_higher_order(eng):
+    arr = "[3, 1, 2]"
+    check(eng, [
+        (f"arrayMap(x -> x * 2, {arr})", [6, 2, 4]),
+        (f"arrayFilter(x -> x > 1, {arr})", [3, 2]),
+        (f"arrayCount(x -> x > 1, {arr})", 2),
+        (f"arrayExists(x -> x = 2, {arr})", 1),
+        (f"arrayAll(x -> x > 0, {arr})", 1),
+        (f"arraySum({arr})", 6.0),
+        (f"arraySort({arr})", [1, 2, 3]),
+        (f"arrayReverseSort({arr})", [3, 2, 1]),
+        (f"arrayFirst(x -> x > 1, {arr})", 3),
+        (f"arrayFirstIndex(x -> x = 2, {arr})", 3),
+        (f"arrayFirstIndex(x -> x = 9, {arr})", 0),
+    ])
 
 
 # -- math -------------------------------------------------------------------
 
 
-def test_math(one):
-    assert abs(val(one, ch.erf(F.lit(1.0))) - math.erf(1.0)) < 1e-6
-    assert abs(val(one, ch.erfc(F.lit(0.5))) - math.erfc(0.5)) < 1e-6
-    assert abs(val(one, ch.lgamma(F.lit(5.0))) - math.lgamma(5.0)) < 1e-8
-    assert abs(val(one, ch.tgamma(F.lit(5.0))) - 24.0) < 1e-6
-    assert abs(val(one, ch.exp10(F.lit(2.0))) - 100.0) < 1e-9
-    assert abs(val(one, ch.cbrt(F.lit(27.0))) - 3.0) < 1e-9
+def test_math(eng):
+    check(eng, [
+        ("erf(1.0)", close(math.erf(1.0), 1e-6)),
+        ("erfc(0.5)", close(math.erfc(0.5), 1e-6)),
+        ("lgamma(5.0)", close(math.lgamma(5.0), 1e-8)),
+        ("tgamma(5.0)", close(24.0, 1e-6)),
+        ("exp10(2.0)", close(100.0, 1e-9)),
+        ("cbrt(27.0)", close(3.0, 1e-9)),
+    ])
 
 
 # -- hashing ----------------------------------------------------------------
 
 
-def test_hashing(one):
-    assert val(one, ch.MD5(F.lit("abc"))) == "900150983cd24fb0d6963f7d28e17f72"
-    assert (
-        val(one, ch.SHA256(F.lit("abc")))
-        == "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad"
-    )
-    # intHash64 is an exact avalanche: distinct inputs -> distinct outputs
-    df = val(one, F.array(*[ch.intHash64(F.lit(i)) for i in range(5)]))
-    assert len(set(df)) == 5
-    assert 0 <= val(one, ch.hashMod(F.lit("key"), 32)) < 32
+def test_hashing(eng):
+    check(eng, [
+        ("hex(MD5('abc'))", "900150983CD24FB0D6963F7D28E17F72"),
+        (
+            "hex(SHA256('abc'))",
+            "BA7816BF8F01CFEA414140DE5DAE2223B00361A396177A9CB410FF61F20015AD",
+        ),
+        # intHash64 is an exact avalanche: distinct inputs -> distinct outputs
+        (
+            "length(arrayDistinct([intHash64(0), intHash64(1), intHash64(2), "
+            "intHash64(3), intHash64(4)]))",
+            5,
+        ),
+    ])
 
 
 # -- url --------------------------------------------------------------------
 
 
-def test_url(one):
-    u = F.lit("https://www.example.com/a/b?x=1&y=2#frag")
-    assert val(one, ch.protocol(u)) == "https"
-    assert val(one, ch.domain(u)) == "www.example.com"
-    assert val(one, ch.domainWithoutWWW(u)) == "example.com"
-    assert val(one, ch.topLevelDomain(u)) == "com"
-    assert val(one, ch.path(u)) == "/a/b"
-    assert val(one, ch.queryString(u)) == "x=1&y=2"
-    assert val(one, ch.fragment(u)) == "frag"
-    assert val(one, ch.extractURLParameter(u, "y")) == "2"
-    assert val(one, ch.extractURLParameterNames(u)) == ["x", "y"]
-    assert val(one, ch.cutWWW(u)) == "https://example.com/a/b?x=1&y=2#frag"
-    assert val(one, ch.cutFragment(u)) == "https://www.example.com/a/b?x=1&y=2"
-    assert (
-        val(one, ch.cutQueryStringAndFragment(u))
-        == "https://www.example.com/a/b"
-    )
-    assert val(one, ch.cutURLParameter(u, "x")) == (
-        "https://www.example.com/a/b?y=2#frag"
-    )
+def test_url(eng):
+    u = "'https://www.example.com/a/b?x=1&y=2#frag'"
+    check(eng, [
+        (f"protocol({u})", "https"),
+        (f"domain({u})", "www.example.com"),
+        (f"domainWithoutWWW({u})", "example.com"),
+        (f"topLevelDomain({u})", "com"),
+        (f"path({u})", "/a/b"),
+        (f"queryString({u})", "x=1&y=2"),
+        (f"fragment({u})", "frag"),
+        (f"extractURLParameter({u}, 'y')", "2"),
+        (f"extractURLParameterNames({u})", ["x", "y"]),
+        (f"cutWWW({u})", "https://example.com/a/b?x=1&y=2#frag"),
+        (f"cutFragment({u})", "https://www.example.com/a/b?x=1&y=2"),
+        (f"cutQueryStringAndFragment({u})", "https://www.example.com/a/b"),
+        (f"cutURLParameter({u}, 'x')", "https://www.example.com/a/b?y=2#frag"),
+    ])
 
 
-def test_url_hierarchy(one):
-    u = F.lit("https://site.io/a/b/c")
-    assert val(one, ch.URLHierarchy(u)) == [
-        "https://site.io",
-        "https://site.io/a",
-        "https://site.io/a/b",
-        "https://site.io/a/b/c",
-    ]
-    assert val(one, ch.URLPathHierarchy(u)) == ["/a", "/a/b", "/a/b/c"]
+def test_url_hierarchy(eng):
+    u = "'https://site.io/a/b/c'"
+    check(eng, [
+        (
+            f"URLHierarchy({u})",
+            [
+                "https://site.io",
+                "https://site.io/a",
+                "https://site.io/a/b",
+                "https://site.io/a/b/c",
+            ],
+        ),
+        # each prefix keeps its trailing separator (FunctionsURL.h
+        # URLPathHierarchy)
+        (f"URLPathHierarchy({u})", ["/a/", "/a/b/", "/a/b/c"]),
+    ])
 
 
-def test_first_significant_subdomain(one):
-    assert (
-        val(one, ch.firstSignificantSubdomain(F.lit("http://news.yandex.com.tr/x")))
-        == "yandex"
-    )
-    assert (
-        val(one, ch.firstSignificantSubdomain(F.lit("http://www.example.com/")))
-        == "example"
-    )
+def test_first_significant_subdomain(eng):
+    check(eng, [
+        ("firstSignificantSubdomain('http://news.yandex.com.tr/x')", "yandex"),
+        ("firstSignificantSubdomain('http://www.example.com/')", "example"),
+    ])
 
 
 # -- ip / encoding ----------------------------------------------------------
 
 
-def test_ip(one):
-    assert val(one, ch.IPv4NumToString(F.lit(3232235777))) == "192.168.1.1"
-    assert val(one, ch.IPv4StringToNum(F.lit("192.168.1.1"))) == 3232235777
-    assert val(one, ch.IPv4NumToStringClassC(F.lit(3232235777))) == "192.168.1.xxx"
-    assert val(one, ch.hex_(F.lit(255))) == "FF"
-    assert val(one, ch.bitmaskToArray(F.lit(50))) == [2, 16, 32]
-    assert val(one, ch.bitTest(F.lit(5), 2)) == 1
-    assert val(one, ch.bitTestAny(F.lit(5), 1, 2)) is True
-    assert val(one, ch.bitTestAll(F.lit(5), 0, 2)) is True
+def test_ip(eng):
+    check(eng, [
+        ("IPv4NumToString(3232235777)", "192.168.1.1"),
+        ("IPv4StringToNum('192.168.1.1')", 3232235777),
+        ("IPv4NumToStringClassC(3232235777)", "192.168.1.xxx"),
+        ("hex(255)", "FF"),
+        ("bitmaskToArray(50)", [2, 16, 32]),
+        ("bitTest(5, 2)", 1),
+        ("bitTestAny(5, 1, 2)", 1),
+        ("bitTestAll(5, 0, 2)", 1),
+    ])
 
 
-def test_uuid(one):
+def test_uuid(eng):
     s = "01234567-89ab-cdef-0123-456789abcdef"
-    assert val(one, ch.UUIDNumToString(ch.UUIDStringToNum(F.lit(s)))) == s
+    check(eng, [(f"UUIDNumToString(UUIDStringToNum('{s}'))", s)])
 
 
 # -- json (visitParam) -------------------------------------------------------
 
 
-def test_visit_param(one):
-    p = F.lit('{"k": 69, "s": "hi", "b": true}')
-    assert val(one, ch.visitParamHas(p, "k")) is True
-    assert val(one, ch.visitParamHas(p, "zz")) is False
-    assert val(one, ch.visitParamExtractUInt(p, "k")) == 69
-    assert val(one, ch.visitParamExtractFloat(p, "k")) == 69.0
-    assert val(one, ch.visitParamExtractString(p, "s")) == "hi"
-    assert val(one, ch.visitParamExtractBool(p, "b")) is True
+def test_visit_param(eng):
+    p = "'{\"k\": 69, \"s\": \"hi\", \"b\": true}'"
+    check(eng, [
+        (f"visitParamHas({p}, 'k')", 1),
+        (f"visitParamHas({p}, 'zz')", 0),
+        (f"visitParamExtractUInt({p}, 'k')", 69),
+        (f"visitParamExtractFloat({p}, 'k')", 69.0),
+        (f"visitParamExtractString({p}, 's')", "hi"),
+        (f"visitParamExtractBool({p}, 'b')", 1),
+    ])
 
 
 # -- misc -------------------------------------------------------------------
 
 
-def test_transform(one):
-    t = ch.transform(F.lit(2), [1, 2, 3], ["one", "two", "three"], "other")
-    assert val(one, t) == "two"
-    t2 = ch.transform(F.lit(9), [1, 2], ["one", "two"], "other")
-    assert val(one, t2) == "other"
+def test_transform(eng):
+    check(eng, [
+        ("transform(2, [1, 2, 3], ['one', 'two', 'three'], 'other')", "two"),
+        ("transform(9, [1, 2], ['one', 'two'], 'other')", "other"),
+    ])
 
 
-def test_misc(one):
-    assert val(one, ch.formatReadableSize(F.lit(1536))) == "1.50 KiB"
-    assert val(one, ch.isFinite(F.lit(1.0))) is True
-    assert val(one, ch.isNaN(F.lit(float("nan")))) is True
-    assert val(one, ch.isInfinite(F.lit(float("inf")))) is True
-    assert val(one, ch.tupleElement(ch.tuple_(F.lit(1), F.lit("a")), 2)) == "a"
-    d = val(
-        one,
-        ch.greatCircleDistance(
-            F.lit(37.6173), F.lit(55.7558), F.lit(30.3141), F.lit(59.9386)
+def test_misc(eng):
+    check(eng, [
+        ("formatReadableSize(1536)", "1.50 KiB"),
+        ("isFinite(1.0)", 1),
+        ("isNaN(toFloat64('nan'))", 1),
+        ("isInfinite(toFloat64('inf'))", 1),
+        ("tupleElement(tuple(1, 'a'), 2)", "a"),
+        # Moscow -> St Petersburg ~635 km
+        (
+            "greatCircleDistance(37.6173, 55.7558, 30.3141, 59.9386)",
+            lambda d: 625_000 < d < 660_000,
         ),
-    )
-    assert 625_000 < d < 660_000  # Moscow -> St Petersburg ~635 km
+    ])
 
 
 # -- aggregates -------------------------------------------------------------
 
 
-def test_aggregates(spark):
-    df = spark.createDataFrame(
+def test_aggregates(spark, eng):
+    spark.createDataFrame(
         [(1, 10.0, "a"), (1, 20.0, "b"), (2, 30.0, "c"), (2, 5.0, "d")],
         "k int, v double, s string",
-    )
-    agg = ch.aggregates if hasattr(ch, "aggregates") else None
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions import (
-        aggregates as A,
-    )
-
-    row = (
-        df.groupBy("k")
-        .agg(
-            A.count_().alias("n"),
-            A.countIf(F.col("v") > 15).alias("n_big"),
-            A.sumIf("v", F.col("v") > 15).alias("s_big"),
-            A.argMax("s", "v").alias("best"),
-            A.uniqExact("s").alias("u"),
-            A.quantileExact("v", 0.5).alias("med"),
-        )
-        .orderBy("k")
-        .collect()
-    )
-    assert row[0]["n"] == 2 and row[0]["n_big"] == 1 and row[0]["s_big"] == 20.0
-    assert row[0]["best"] == "b" and row[1]["best"] == "c"
-    assert row[1]["med"] == 17.5
+    ).createOrReplaceTempView("fn_agg_t")
+    rows = eng.sql(
+        "SELECT k, count() AS n, countIf(v > 15) AS n_big, "
+        "sumIf(v, v > 15) AS s_big, argMax(s, v) AS best, "
+        "uniqExact(s) AS u, quantileExact(0.5)(v) AS med "
+        "FROM fn_agg_t GROUP BY k ORDER BY k"
+    ).collect()
+    assert rows[0]["n"] == 2 and rows[0]["n_big"] == 1 and rows[0]["s_big"] == 20.0
+    assert rows[0]["best"] == "b" and rows[1]["best"] == "c"
+    # nth element at floor(0.5 * 2) of [5, 30], no interpolation
+    # (AggregateFunctionQuantileExact.h)
+    assert rows[1]["med"] == 30.0
 
 
-def test_uniq_up_to(spark):
-    df = spark.createDataFrame([(i % 7,) for i in range(100)], "x int")
-    r = df.agg(ch.uniqUpTo(5)(F.col("x")).alias("u")).first()["u"]
-    assert r == 6  # more than 5 distinct -> N+1
-    df2 = spark.createDataFrame([(i % 3,) for i in range(10)], "x int")
-    r2 = df2.agg(ch.uniqUpTo(5)(F.col("x")).alias("u")).first()["u"]
-    assert r2 == 3
+def test_uniq_up_to(eng):
+    check(eng, [
+        # more than 5 distinct -> N+1
+        ("uniqUpTo(5)(number % 7)", 6),
+    ], "FROM (SELECT number FROM system.numbers LIMIT 100)")
+    check(eng, [("uniqUpTo(5)(number % 3)", 3)],
+          "FROM (SELECT number FROM system.numbers LIMIT 10)")
 
 
-def test_sum_array_combinator(spark):
-    df = spark.createDataFrame([([1.0, 2.0],), ([3.0],)], "a array<double>")
-    r = df.agg(
-        ch.sum_array(F.col("a")).alias("s"),
-        ch.count_array(F.col("a")).alias("c"),
-    ).first()
-    assert r["s"] == 6.0 and r["c"] == 3
+def test_sum_array_combinator(spark, eng):
+    spark.createDataFrame(
+        [([1.0, 2.0],), ([3.0],)], "a array<double>"
+    ).createOrReplaceTempView("fn_arr_t")
+    check(eng, [("sumArray(a)", 6.0), ("countArray(a)", 3)], "FROM fn_arr_t")
 
 
-def test_sum_map(spark):
-    df = spark.createDataFrame(
+def test_sum_map(spark, eng):
+    spark.createDataFrame(
         [(["a", "b"], [1.0, 2.0]), (["b", "c"], [3.0, 4.0])],
         "k array<string>, v array<double>",
-    )
-    r = df.agg(ch.sumMap(F.col("k"), F.col("v")).alias("m")).first()["m"]
-    assert r == {"a": 1.0, "b": 5.0, "c": 4.0}
+    ).createOrReplaceTempView("fn_map_t")
+    check(eng, [("sumMap(k, v)", {"a": 1.0, "b": 5.0, "c": 4.0})],
+          "FROM fn_map_t")

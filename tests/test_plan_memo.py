@@ -147,3 +147,36 @@ def test_plan_cache_eviction_keeps_live_session_entries(spark):
     ] is live
     assert all(k[0] != "deadapp" for k in q._plans)
     assert calls == ["/live", "/live2"]
+
+
+def test_stored_plan_cache_keeps_no_unsigned_plan(spark, tmp_path):
+    """A stored-hits plan whose store meta file cannot be read after the
+    build has no signature to be looked up by, so the memo must not keep
+    it (such entries were never read back and only piled up)."""
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.queries import (
+        hits_q,
+    )
+
+    sf = tmp_path / f"sfmemo{os.getpid()}"
+    sf.mkdir()
+    (sf / "events.parquet").write_bytes(b"not read")
+    store = hits_q._hits_store_path(str(sf))
+    os.makedirs(store)
+    try:
+        # a dangling link: the meta marker exists but cannot be read
+        os.symlink(
+            str(tmp_path / "gone"), os.path.join(store, "_HITS_STORE_META")
+        )
+        calls = []
+
+        @hits_q._stored_plan_cache
+        def build(spark, sf_dir):
+            calls.append(sf_dir)
+            return spark.range(1)
+
+        for _ in range(3):
+            build(spark, str(sf))
+        assert build._plans == {}
+        assert len(calls) == 3
+    finally:
+        shutil.rmtree(store)

@@ -1,36 +1,32 @@
 """Unit tests for the long-tail functions added after the main dialect
-sweep: arrayEnumerateUniq, arrayReduce, reinterpret*."""
+sweep (arrayEnumerateUniq, arrayReduce, reinterpret*, -ForEach, IPv6,
+convertCharset), run as CH-SQL through ChEngine."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions.arrays import (
-    arrayEnumerateUniq,
-    arrayReduce,
-)
-from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions.reinterpret import (
-    reinterpretAsDate,
-    reinterpretAsDateTime,
-    reinterpretAsString,
-    reinterpretAsUInt32,
-    reinterpretAsUInt64,
+from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect import (
+    ChEngine,
 )
 
 
-def _one(spark, col):
-    return spark.range(1).select(col.alias("v")).collect()[0]["v"]
+@pytest.fixture(scope="module")
+def seng(spark):
+    return ChEngine(spark)
 
 
-def test_enumerate_uniq(spark):
-    got = _one(spark, arrayEnumerateUniq(F.array(*[F.lit(x) for x in [10, 20, 10, 30, 10, 20]])))
+def _one(eng, expr: str, src: str = ""):
+    return eng.sql(f"SELECT {expr} AS v {src}").collect()[0]["v"]
+
+
+def test_enumerate_uniq(seng):
+    got = _one(seng, "arrayEnumerateUniq([10, 20, 10, 30, 10, 20])")
     assert got == [1, 1, 2, 1, 3, 2]
 
 
-def test_enumerate_uniq_empty(spark):
-    got = _one(spark, arrayEnumerateUniq(F.array().cast("array<int>")))
-    assert got == []
+def test_enumerate_uniq_empty(seng):
+    assert _one(seng, "arrayEnumerateUniq(emptyArrayInt32())") == []
 
 
 @pytest.mark.parametrize(
@@ -47,122 +43,95 @@ def test_enumerate_uniq_empty(spark):
         ("groupUniqArray", [1, 2, 3, 4]),
     ],
 )
-def test_array_reduce(spark, agg, expected):
-    arr = F.array(*[F.lit(x) for x in [1, 2, 3, 4]])
-    got = _one(spark, arrayReduce(agg, arr))
+def test_array_reduce(seng, agg, expected):
+    got = _one(seng, f"arrayReduce('{agg}', [1, 2, 3, 4])")
     if isinstance(expected, list):
         assert sorted(got) == expected
     else:
         assert got == expected
 
 
-def test_array_reduce_median(spark):
-    arr = F.array(*[F.lit(x) for x in [5, 1, 9]])
-    assert _one(spark, arrayReduce("median", arr)) == 5
+def test_array_reduce_median(seng):
+    assert _one(seng, "arrayReduce('median', [5, 1, 9])") == 5
 
 
-def test_array_reduce_unknown(spark):
-    with pytest.raises(ValueError):
-        arrayReduce("bogus", F.array())
+def test_array_reduce_unknown(seng):
+    with pytest.raises(Exception):
+        _one(seng, "arrayReduce('bogus', [1])")
 
 
-def test_reinterpret_string(spark):
+def test_reinterpret_string(seng):
     # 0x3039 = 12345 → bytes 0x39 '9', 0x30 '0' little-endian
-    assert _one(spark, reinterpretAsString(F.lit(12345))) == "90"
-    assert _one(spark, reinterpretAsString(F.lit(65))) == "A"
+    assert _one(seng, "toString(reinterpretAsString(12345))") == "90"
+    assert _one(seng, "toString(reinterpretAsString(65))") == "A"
 
 
-def test_reinterpret_string_roundtrip(spark):
-    # roundtrip holds on the ASCII-byte domain (every byte < 0x80).
-    # For bytes >= 0x80 the reference produces a byte string that is
-    # NOT valid UTF-8, which Spark's StringType cannot represent —
-    # reinterpretAsString emits codepoints there (documented), while
-    # the string->int direction reads true UTF-8 bytes.
-    for n in (1, 65, 12345, 0x7F41, 0x7F7F7F7F):
-        got = _one(spark, reinterpretAsUInt64(reinterpretAsString(F.lit(n))))
-        assert got == n, n
+def test_reinterpret_string_roundtrip(seng):
+    for n in (1, 65, 12345, 0x7F41, 0x7F7F7F7F, 0xFFFF, 2**63 - 1):
+        assert _one(seng, f"reinterpretAsUInt64(reinterpretAsString({n}))") == n, n
 
 
-def test_reinterpret_uint32_multibyte(spark):
+def test_reinterpret_uint32_multibyte(seng):
     # '€' = UTF-8 E2 82 AC: the first 4 BYTES (zero-padded) little-
     # endian = 0xAC82E2 — character-based extraction would see the
     # codepoint 8364 instead of the raw bytes
-    assert _one(spark, reinterpretAsUInt32(F.lit("€"))) == 0xAC82E2
+    assert _one(seng, "reinterpretAsUInt32('€')") == 0xAC82E2
 
 
-def test_reinterpret_uint32_truncates(spark):
+def test_reinterpret_uint32_truncates(seng):
     # only the first 4 bytes participate
-    assert _one(spark, reinterpretAsUInt32(F.lit("AAAAAA"))) == 0x41414141
+    assert _one(seng, "reinterpretAsUInt32('AAAAAA')") == 0x41414141
 
 
-def test_reinterpret_dates(spark):
-    assert str(_one(spark, reinterpretAsDate(F.lit(1)))) == "1970-01-02"
-    assert str(_one(spark, reinterpretAsDateTime(F.lit(86400)))).startswith("1970-01-02")
+def test_reinterpret_dates(seng):
+    got = _one(seng, "reinterpretAsDate(reinterpretAsString(toUInt16(1)))")
+    assert str(got) == "1970-01-02"
+    got = _one(seng, "reinterpretAsDateTime(reinterpretAsString(86400))")
+    assert str(got).startswith("1970-01-02")
 
 
-def test_reinterpret_string_no_nul(spark):
-    # all 8 bytes nonzero (ADVICE regression: array_position yields 0,
-    # not NULL, when no NUL byte exists)
-    assert _one(spark, reinterpretAsString(F.lit(0x4141414141414141))) == "AAAAAAAA"
+def test_reinterpret_string_no_nul(seng):
+    # all 8 bytes nonzero (regression: array_position yields 0, not
+    # NULL, when no NUL byte exists)
+    got = _one(seng, f"toString(reinterpretAsString({0x4141414141414141}))")
+    assert got == "AAAAAAAA"
 
 
-def test_for_each_combinator(spark):
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions.aggregates import (
-        avgForEach,
-        for_each,
-        maxForEach,
-        minForEach,
-        sumForEach,
-    )
-
-    df = spark.createDataFrame(
+def test_for_each_combinator(spark, seng):
+    spark.createDataFrame(
         [(1, [1.0, 2.0]), (1, [10.0, 20.0, 30.0]), (2, [5.0])],
         "g INT, a ARRAY<DOUBLE>",
-    )
+    ).createOrReplaceTempView("foreach_t")
     r = {
         row["g"]: row
-        for row in df.groupBy("g")
-        .agg(
-            sumForEach("a").alias("s"),
-            minForEach("a").alias("mn"),
-            maxForEach("a").alias("mx"),
-            avgForEach("a").alias("av"),
-        )
-        .collect()
+        for row in seng.sql(
+            "SELECT g, sumForEach(a) AS s, minForEach(a) AS mn, "
+            "maxForEach(a) AS mx, avgForEach(a) AS av "
+            "FROM foreach_t GROUP BY g"
+        ).collect()
     }
     assert r[1]["s"] == [11.0, 22.0, 30.0]
     assert r[1]["mn"] == [1.0, 2.0, 30.0]
     assert r[1]["mx"] == [10.0, 20.0, 30.0]
     assert r[1]["av"] == [5.5, 11.0, 30.0]
     assert r[2]["s"] == [5.0]
-    with pytest.raises(ValueError):
-        for_each("bogus", F.col("a"))
+    with pytest.raises(Exception):
+        seng.sql("SELECT bogusForEach(a) FROM foreach_t").collect()
 
 
-def test_quantile_weighted_and_deterministic(spark):
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions.aggregates import (
-        quantileDeterministic,
-        quantileExactWeighted,
-    )
-
-    df = spark.createDataFrame(
+def test_quantile_weighted_and_deterministic(spark, seng):
+    spark.createDataFrame(
         [(1.0, 1), (2.0, 1), (3.0, 8)], "v DOUBLE, w INT"
-    )
-    r = df.agg(
-        quantileExactWeighted("v", "w").alias("wq"),
-        quantileDeterministic("v", "w").alias("dq"),
+    ).createOrReplaceTempView("qw_t")
+    r = seng.sql(
+        "SELECT quantileExactWeighted(0.5)(v, w) AS wq, "
+        "quantileDeterministic(0.5)(v, w) AS dq FROM qw_t"
     ).first()
     assert r["wq"] == 3.0  # 3 carries 80% of the weight
     assert r["dq"] == 2.0
 
 
-def test_ipv6_roundtrip_and_cut(spark):
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions.ip import (
-        IPv6NumToString,
-        IPv6StringToNum,
-        cutIPv6,
-    )
-
+def test_ipv6_roundtrip_and_cut(seng):
     cases = {
         "2001:0db8:0000:0000:0000:0000:0000:0001": "2001:db8::1",
         "::1": "::1",
@@ -173,22 +142,19 @@ def test_ipv6_roundtrip_and_cut(spark):
         "1:0:0:2:0:0:3:4": "1::2:0:0:3:4",  # leftmost-longest run wins
         "1:2:3:4:5:6:7:8": "1:2:3:4:5:6:7:8",
     }
-    df = spark.createDataFrame([(s,) for s in cases], "s STRING")
+    src = "FROM (SELECT arrayJoin([{}]) AS s)".format(
+        ", ".join(f"'{s}'" for s in cases)
+    )
     got = {
-        r["s"]: r["rt"]
-        for r in df.select(
-            "s", IPv6NumToString(IPv6StringToNum(F.col("s"))).alias("rt")
+        r["s"]: (r["rt"], r["c"])
+        for r in seng.sql(
+            "SELECT s, IPv6NumToString(IPv6StringToNum(s)) AS rt, "
+            f"cutIPv6(IPv6StringToNum(s), 2, 1) AS c {src}"
         ).collect()
     }
-    assert got == cases
-    cut = {
-        r["s"]: r["c"]
-        for r in df.select(
-            "s", cutIPv6(IPv6StringToNum(F.col("s")), 2, 1).alias("c")
-        ).collect()
-    }
-    assert cut["1:2:3:4:5:6:7:8"] == "1:2:3:4:5:6:7:0"
-    assert cut["::ffff:192.168.0.1"] == "::ffff:192.168.0.0"
+    assert {s: rt for s, (rt, _) in got.items()} == cases
+    assert got["1:2:3:4:5:6:7:8"][1] == "1:2:3:4:5:6:7:0"
+    assert got["::ffff:192.168.0.1"][1] == "::ffff:192.168.0.0"
 
 
 def test_row_number_in_block_and_shard_by_hash(spark):
@@ -217,38 +183,17 @@ def test_row_number_in_block_and_shard_by_hash(spark):
     assert a.count() == b.count() and 0 < a.count() < 1000
 
 
-def test_convert_charset(spark):
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions import (
-        charset,
-    )
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions.strings import (
-        convertCharset,
-    )
-
-    # idempotent: the UDF is normally registered by ChEngine init; this
-    # test must not depend on another test file having created one
-    charset.register(spark)
-
-    df = spark.createDataFrame([("héllo",)], "s STRING")
-    out = df.select(
-        convertCharset(F.col("s"), "utf-8", "iso-8859-1").alias("b")
-    ).first()["b"]
-    assert bytes(out) == "héllo".encode("iso-8859-1")
-    back = df.select(
-        F.decode(
-            convertCharset(F.col("s"), "utf-8", "utf-16be"), "UTF-16BE"
-        ).alias("s2")
-    ).first()["s2"]
-    assert back == "héllo"
+def test_convert_charset(seng):
+    # the ICU-parity UDF is registered by ChEngine init
+    b = _one(seng, "convertCharset('héllo', 'utf-8', 'iso-8859-1')")
+    assert bytes(b) == "héllo".encode("iso-8859-1")
+    b = _one(seng, "convertCharset('héllo', 'utf-8', 'utf-16be')")
+    assert bytes(b).decode("utf-16-be") == "héllo"
     # koi8-r routes to the ICU-parity UDF path (functions/charset.py);
     # ASCII is identity in koi8-r
-    df2 = spark.createDataFrame([("privet",)], "s STRING")
-    koi = df2.select(
-        convertCharset(F.col("s"), "utf-8", "koi8-r").alias("b")
-    ).first()["b"]
-    assert bytes(koi) == b"privet"
-    with pytest.raises(ValueError):
-        convertCharset(F.col("s"), "utf-8", "no-such-charset")
+    assert bytes(_one(seng, "convertCharset('privet', 'utf-8', 'koi8-r')")) == b"privet"
+    with pytest.raises(Exception):
+        _one(seng, "convertCharset('privet', 'utf-8', 'no-such-charset')")
 
 
 # ------------------------------------------------- r8 straggler sweep
@@ -256,15 +201,6 @@ def test_convert_charset(spark):
 # from the golden corpus — verified against reference-derived vectors
 # (SipHash.h compiled directly for the sipHash128 values; FIPS 180-2
 # digests for SHA2; FunctionsURL.h/FunctionsFormatting.h semantics).
-
-
-@pytest.fixture(scope="module")
-def seng(spark):
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect import (
-        ChEngine,
-    )
-
-    return ChEngine(spark)
 
 
 def _tsv(eng, q: str) -> str:
