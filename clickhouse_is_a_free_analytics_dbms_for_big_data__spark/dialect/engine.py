@@ -280,12 +280,7 @@ class ChEngine:
         output formats' block boundaries (each branch is a block)."""
         if not getattr(self, "last_union_branches", None):
             return None
-        try:
-            return [
-                self.spark.sql(b).count() for b in self.last_union_branches
-            ]
-        except Exception:
-            return None
+        return [self.spark.sql(b).count() for b in self.last_union_branches]
 
     def rows_before_limit(self) -> int | None:
         """Pre-LIMIT row count of the last SELECT (JSON/XML formats'
@@ -293,10 +288,7 @@ class ChEngine:
         display-format-only, same client-side cost profile as Pretty."""
         if self.last_pre_limit_sql is None:
             return None
-        try:
-            n = self.spark.sql(self.last_pre_limit_sql).count()
-        except Exception:
-            return None
+        n = self.spark.sql(self.last_pre_limit_sql).count()
         if self.last_limit_block_rows is not None:
             # plain streaming limit reads blocks of limit+offset rows
             n = min(n, self.last_limit_block_rows)

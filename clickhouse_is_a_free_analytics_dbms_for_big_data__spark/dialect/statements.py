@@ -10,8 +10,10 @@ InterpreterDescribeQuery, InterpreterExistsQuery,
 InterpreterOptimizeQuery, Drop.
 Here a created table is a named DataFrame (temp view) plus TableMeta
 derived from the classic MergeTree-family engine arguments
-(StorageFactory.cpp:242-859); INSERT unions new rows in and re-registers
-the view — the Spark analog of appending a part.  ALTER rewrites the
+(StorageFactory.cpp:242-859); INSERT checkpoints its block alone as one
+more piece of the table's rows and re-points the raw-rows view the
+published view reads — the Spark analog of appending a part, with
+pieces merged tier by tier like background merges.  ALTER rewrites the
 registered view with the projected/extended schema (the reference
 rewrites columns.txt and converts parts lazily); OPTIMIZE applies the
 engine's merge transform eagerly (the reference's background merge).
@@ -132,6 +134,16 @@ class TableDef:
     # blockSize() on reads replays it (goldens 00340/00341)
     block_sizes: list = field(default_factory=list)
     row_count: int = 0
+    # the checkpointed pieces whose union is ``raw``, oldest first, as
+    # (frame, tier) pairs: an INSERT appends its block as one tier-0
+    # piece, and _PIECES_PER_TIER pieces of one tier merge into one of
+    # the next (_append_piece).  ``pieces_raw`` is the union they were
+    # last combined into; a ``raw`` that another statement rebuilt
+    # (OPTIMIZE, ALTER, DETACH/ATTACH) is not it and counts as one piece
+    pieces: list = field(default_factory=list)
+    pieces_raw: DataFrame | None = None
+    # text of the published view as last defined (_publish)
+    published_sql: str | None = None
 
 
 def _render_type(toks: list[Token]) -> str:
@@ -1099,8 +1111,8 @@ def execute_statement(engine, ch_sql: str) -> DataFrame | None:
         tdef = engine.tables.pop(name, None)
         if tdef is not None:
             engine.detached[name] = tdef
-            view = engine.table_views.pop(name, _view_of(name))
-            engine.spark.catalog.dropTempView(view)
+            _drop_views(engine, engine.table_views.pop(name, _view_of(name)))
+            tdef.published_sql = None
         return None
     if head == "ATTACH":
         i = 2 if tokens[1].is_kw("TABLE") else 1
@@ -1116,7 +1128,7 @@ def execute_statement(engine, ch_sql: str) -> DataFrame | None:
             _create(engine, [Token("ident", "CREATE")] + tokens[1:])
             newdef = engine.tables.get(name)
             if newdef is not None:
-                newdef.raw = tdef.raw
+                _adopt_rows(newdef, tdef)
                 newdef.parts = tdef.parts
                 newdef.row_count = tdef.row_count
                 newdef.block_sizes = tdef.block_sizes
@@ -1347,6 +1359,7 @@ def _create(engine, tokens: list[Token]) -> None:
                 name, cols, eng_name, meta, raw=_empty_rows(engine, cols),
                 engine_full=engine_full,
             )
+            tdef.pieces_raw = tdef.raw  # no pieces yet
             engine.tables[name] = tdef
             engine.table_views[name] = view
             engine.table_meta[view] = meta
@@ -1361,9 +1374,8 @@ def _create(engine, tokens: list[Token]) -> None:
                     a[0].text for a in eng_args[:2]
                 )
                 engine.buffers[name] = tgt
-                tgt_view = engine.table_views.get(tgt, _view_of(tgt))
-                engine.register_table(
-                    view, engine.spark.table(tgt_view), meta
+                _alias_view(
+                    engine, view, engine.table_views.get(tgt, _view_of(tgt))
                 )
             else:
                 _publish(engine, tdef)
@@ -1372,9 +1384,7 @@ def _create(engine, tokens: list[Token]) -> None:
         # CREATE TABLE t [ENGINE = X] AS SELECT ... — schema and initial
         # rows from the query (InterpreterCreateQuery as-select)
         sel_sql = _toks_sql(tokens[i + 1 :])
-        df = engine.spark.sql(engine.translate(sel_sql)).localCheckpoint(
-            eager=True
-        )
+        df = _checkpoint(engine.spark.sql(engine.translate(sel_sql)))
         if cols is None:
             cols = [
                 ColumnDef(f.name, f.dataType.simpleString(),
@@ -1388,6 +1398,8 @@ def _create(engine, tokens: list[Token]) -> None:
     tdef = TableDef(name, cols, eng_name, meta, raw=df, engine_full=engine_full)
     if i < len(tokens) and tokens[i].is_kw("AS"):
         _forget_blocks(tdef)  # rows of a query, not of INSERT blocks
+    else:
+        tdef.pieces_raw = df  # no pieces yet
     engine.tables[name] = tdef
     engine.table_views[name] = view
     engine.table_meta[view] = meta  # FINAL looks up by rendered name
@@ -1411,7 +1423,7 @@ def _create(engine, tokens: list[Token]) -> None:
             # 00074/00296; detached parts stay replica-local)
             leader = engine.tables[existing[0]]
             if leader.raw is not None:
-                tdef.raw = leader.raw
+                _adopt_rows(tdef, leader)
             tdef.parts = leader.parts
             tdef.row_count = leader.row_count
             tdef.block_sizes = list(leader.block_sizes)
@@ -1469,11 +1481,62 @@ def _empty_rows(engine, cols: list[ColumnDef]) -> DataFrame:
     return engine.spark.createDataFrame(engine.spark.sparkContext.emptyRDD(), ddl)
 
 
+# hidden per-row columns of a MergeTree-family table's raw rows, and the
+# virtual columns (hidden from *) the published view shows them as: the
+# row's data part, and the block number and row offset its INSERT gave
+# it.  Merges keep the last two, so they order rows by insertion
+# (the reference's _block_number/_block_offset).
+_HIDDEN = {
+    "__part": ("_part", "STRING"),
+    "__block": ("_block_number", "BIGINT"),
+    "__offset": ("_block_offset", "BIGINT"),
+}
+
+
+def _raw_view(view: str) -> str:
+    """The name the published view reads a table's raw rows under."""
+    return f"__raw_{view}"
+
+
+def _drop_views(engine, view: str) -> None:
+    engine.spark.catalog.dropTempView(view)
+    engine.spark.catalog.dropTempView(_raw_view(view))
+
+
+def _alias_view(engine, alias: str, target: str) -> None:
+    """A view reading ``target`` as it is at read time (a Buffer table
+    over its destination)."""
+    engine.spark.sql(
+        f"CREATE OR REPLACE TEMPORARY VIEW `{alias}` AS SELECT * FROM `{target}`"
+    )
+
+
 def _publish(engine, tdef: TableDef) -> None:
-    """Register the public view: the raw rows projected through the
-    current column list, with NULL part-absence sentinels replaced by
-    the CURRENT declared type's default (non-Nullable columns only —
-    matches reading an old part that predates an ALTER ADD).
+    """Register the public view of ``tdef.raw``.  The raw rows go under
+    the raw-rows view name; the published view is SQL text over that
+    name, which Spark resolves again on every read.  The text changes
+    only with the column list or the raw schema, and only then is the
+    view defined again: an INSERT just re-points the raw-rows name."""
+    view = engine.table_views.get(tdef.name, _view_of(tdef.name))
+    raw_view = _raw_view(view)
+    tdef.raw.createOrReplaceTempView(raw_view)
+    engine.table_meta[view] = tdef.meta
+    sql = _published_sql(tdef, raw_view, tdef.raw.columns)
+    if sql == tdef.published_sql:
+        return
+    engine.spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW `{view}` AS {sql}")
+    tdef.published_sql = sql
+    # Buffer tables aliasing this destination take up its new schema
+    for bname, tgt in engine.buffers.items():
+        if tgt == tdef.name:
+            _alias_view(engine, engine.table_views.get(bname, _view_of(bname)), view)
+
+
+def _published_sql(tdef: TableDef, raw_view: str, raw_cols: list[str]) -> str:
+    """The published projection of the raw rows: the current column
+    list, with NULL part-absence sentinels replaced by the CURRENT
+    declared type's default (non-Nullable columns only — matches
+    reading an old part that predates an ALTER ADD).
 
     Defaults are computed in DEPENDENCY LAYERS over the already
     published values of the columns they reference (``d1 default
@@ -1481,13 +1544,12 @@ def _publish(engine, tdef: TableDef) -> None:
     evaluateMissingDefaults recursion); raw columns are renamed
     ``__raw_*`` so a fill expression's bare column reference always
     resolves to the published value."""
-    from pyspark.sql import functions as F
+    import re as _re
 
-    view = engine.table_views.get(tdef.name, _view_of(tdef.name))
-    raw = tdef.raw
-    have = set(raw.columns)
+    have = set(raw_cols)
     phys = [c for c in tdef.columns if not c.is_alias]
     names = {c.name for c in tdef.columns}
+    mergetree = tdef.engine.endswith("MergeTree")
 
     def nested_fill(c: ColumnDef) -> str | None:
         """An absent Nested member fills to its SIBLING's length with
@@ -1533,59 +1595,52 @@ def _publish(engine, tdef: TableDef) -> None:
             f"AS {c.spark_type}) AS `{c.name}`"
         )
 
-    df = raw.select(
-        *(F.col(f"`{c}`").alias(f"__raw_{c}") for c in raw.columns)
-    )
+    # MergeTree-family reads are PK-ordered (sorted parts,
+    # MergeTreeData.h) — emulate by sorting the published view; outer
+    # ORDER BY / aggregation overrides it, plain SELECTs see PK order
+    phys_names = {c.name for c in phys}
+    pk_exprs = []
+    for k in tdef.meta.primary_key:
+        words = _re.findall(r"[A-Za-z_]\w*", k)
+        if k in phys_names:
+            pk_exprs.append(f"`{k}`")
+        elif (
+            words  # a constant key orders nothing (and `1` is an ordinal)
+            and all(w in phys_names for w in words)
+            and _re.fullmatch(r"[-+\w\s().,`]+", k)
+        ):
+            # expression key over physical columns (e.g. ``-x``)
+            pk_exprs.append(k)
+    sort = bool(pk_exprs) and mergetree
+    sel = [f"`{c}` AS `__raw_{c}`" for c in raw_cols]
+    if sort:
+        # stable merge order: equal keys keep part/insertion order (the
+        # sorted-merge streams parts in order) — Spark's sort is not
+        # stable, so pin ties with the raw row position
+        sel.append("monotonically_increasing_id() AS `__ins_ord`")
+    sql = f"SELECT {', '.join(sel)} FROM `{raw_view}`"
+    done: set[str] = set()
     pending = list(phys)
     while pending:
-        done = {c.name for c in phys if c.name in df.columns}
         layer, rest = [], []
         for c in pending:
             deps = _expr_deps(fill_of(c), names) - done - {c.name}
             (layer if not deps else rest).append(c)
         if not layer:
             layer, rest = pending, []  # circular: let analysis surface it
-        df = df.selectExpr("*", *(pub_expr(c, fill_of(c)) for c in layer))
+        exprs = ", ".join(pub_expr(c, fill_of(c)) for c in layer)
+        sql = f"SELECT *, {exprs} FROM ({sql})"
+        done |= {c.name for c in layer}
         pending = rest
-    final_cols = [f"`{c.name}`" for c in phys]
-    if "__part" in raw.columns:
-        # MergeTree virtual column: part name per row, hidden from *
-        # (MergeTreeBlockInputStream _part)
-        df = df.withColumn("_part", F.col("__raw___part"))
-        final_cols.append("`_part`")
-    df = df.selectExpr(*final_cols)
-    # MergeTree-family reads are PK-ordered (sorted parts,
-    # MergeTreeData.h) — emulate by sorting the published view; outer
-    # ORDER BY / aggregation overrides it, plain SELECTs see PK order
-    import re as _re
-
-    phys_names = {c.name for c in phys}
-    pk_exprs = []
-    for k in tdef.meta.primary_key:
-        if k in phys_names:
-            pk_exprs.append(F.col(f"`{k}`"))
-        elif all(
-            w in phys_names
-            for w in _re.findall(r"[A-Za-z_]\w*", k)
-        ) and _re.fullmatch(r"[-+\w\s().,`]+", k):
-            # expression key over physical columns (e.g. ``-x``)
-            pk_exprs.append(F.expr(k))
-    if pk_exprs and tdef.engine.endswith("MergeTree"):
-        # stable merge order: equal keys keep part/insertion order
-        # (the sorted-merge streams parts in order) — Spark's sort is
-        # not stable, so pin ties with the raw row position
-        df = (
-            df.withColumn("__ins_ord", F.monotonically_increasing_id())
-            .sort(*pk_exprs, F.col("__ins_ord"))
-            .drop("__ins_ord")
-        )
-    engine.register_table(view, df, tdef.meta)
-    # Buffer tables aliasing this destination see the new contents
-    for bname, tgt in getattr(engine, "buffers", {}).items():
-        if tgt == tdef.name:
-            engine.register_table(
-                engine.table_views.get(bname, _view_of(bname)), df, tdef.meta
-            )
+    out = [f"`{c.name}`" for c in phys]
+    if mergetree:
+        for hidden, (pub, typ) in _HIDDEN.items():
+            src = f"`__raw_{hidden}`" if hidden in have else f"CAST(NULL AS {typ})"
+            out.append(f"{src} AS `{pub}`")
+    sql = f"SELECT {', '.join(out)} FROM ({sql})"
+    if sort:
+        sql += f" ORDER BY {', '.join(pk_exprs)}, `__ins_ord`"
+    return sql
 
 
 def _drop(engine, tokens: list[Token]) -> None:
@@ -1611,7 +1666,7 @@ def _drop_table(engine, name: str) -> None:
     engine.tables.pop(name, None)
     view = engine.table_views.pop(name, _view_of(name))
     engine.table_meta.pop(view, None)
-    engine.spark.catalog.dropTempView(view)
+    _drop_views(engine, view)
     for grp in getattr(engine, "zk_groups", {}).values():
         if name in grp:
             grp.remove(name)
@@ -1723,13 +1778,10 @@ def _insert(engine, tokens: list[Token], payload: str | None = None) -> None:
         # separately (goldens 00341)
         _arms = _union_arms(_eff_toks)
         if len(_arms) > 1:
-            try:
-                _arm_counts = [
-                    engine.spark.sql(_translate_union(a, ctx)).count()
-                    for a in _arms
-                ]
-            except Exception:
-                _arm_counts = None
+            _arm_counts = [
+                engine.spark.sql(_translate_union(a, ctx)).count()
+                for a in _arms
+            ]
         if had_totals or _ext:
             from ..sources.formats import format_result
 
@@ -1833,7 +1885,6 @@ def _ingest_df(
     from pyspark.sql.types import NumericType
 
     view = engine.table_views.get(name, _view_of(name))
-    new_df.createOrReplaceTempView(f"__ins_{view}")
     sel = []
     src_fields = new_df.schema.fields
     for c in tdef.columns:
@@ -1859,30 +1910,31 @@ def _ingest_df(
                 )
             else:
                 sel.append(f"CAST({v} AS {c.spark_type}) AS `{c.name}`")
-    shaped = engine.spark.sql(
-        f"SELECT {', '.join(sel)} FROM __ins_{view}"
-    )
-    shaped = _fill_defaults(tdef, shaped)
-    # Replicated* INSERT deduplication: a block whose (PK-sorted)
-    # content equals an already-written block is silently dropped
-    # (ReplicatedMergeTreeBlockOutputStream checksum dedup —
-    # goldens 00215/00226)
+    shaped = _fill_defaults(tdef, new_df.selectExpr(*sel))
+    cols = shaped.columns
+    mergetree = tdef.engine.endswith("MergeTree")
+    if mergetree:
+        shaped = shaped.selectExpr("*", "monotonically_increasing_id() AS `__offset`")
+    # the block alone is checkpointed, by the one job that also counts
+    # it: the reference writes a new part and leaves the old ones be
+    block = _checkpoint(shaped, eager=False)
+    stats = _block_stats(tdef, block, cols)
+    n = sum(int(r["__rows"]) for r in stats)
+    # Replicated* INSERT deduplication: a block whose content equals an
+    # already-written block is silently dropped
+    # (ReplicatedMergeTreeBlockOutputStream checksum dedup — goldens
+    # 00215/00226).  The fingerprint is order-insensitive (count, sum
+    # and xor of per-row hashes), so only per-partition aggregates
+    # leave the executors, never the block itself — the reference
+    # likewise checksums block data on the server
     if getattr(tdef.meta, "replicated", False):
-        # executor-side fingerprint: per-row hash combined with
-        # order-insensitive aggregates (count + sum + xor), so only ONE
-        # tiny agg row reaches the driver — never the block itself
-        # (the reference likewise checksums block data on the server)
-        from pyspark.sql import functions as F
+        from functools import reduce
 
-        _h = F.xxhash64(
-            *[F.col(f"`{c}`").cast("string") for c in shaped.columns]
+        fp = (
+            n,
+            str(sum(r["__hsum"] for r in stats) if stats else None),
+            reduce(lambda x, y: x ^ y, (r["__hxor"] for r in stats)) if stats else None,
         )
-        _a = shaped.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_h.cast("decimal(38,0)")).alias("s"),
-            F.bit_xor(_h).alias("x"),
-        ).first()
-        fp = (_a["n"], str(_a["s"]), _a["x"])
         seen = getattr(tdef, "_dedup_blocks", None)
         if seen is None:
             seen = set()
@@ -1890,27 +1942,14 @@ def _ingest_df(
         if fp in seen:
             return None
         seen.add(fp)
-    # append to the raw backing rows (the reference appends a part);
-    # localCheckpoint breaks lineage so repeated INSERTs stay flat
-    n = sum(src_blocks) if src_blocks is not None else None
-    if tdef.engine.endswith("MergeTree"):
-        pmap, n = _track_insert_parts(engine, tdef, shaped)
-        shaped = _tag_part(tdef, shaped, pmap)
-    existing = tdef.raw if tdef.raw is not None else engine.spark.table(view)
-    merged = existing.unionByName(
-        shaped, allowMissingColumns=True
-    ).localCheckpoint(eager=True)
-    tdef.raw = merged
+    piece = _record_parts(tdef, block, stats) if mergetree else block
+    _append_piece(tdef, piece)
     # record the inserted BLOCK structure: the insert pipeline wraps a
     # SquashingBlockOutputStream (InterpreterInsertQuery.cpp:102) over
     # the source stream's blocks — stored-table blockSize() replays it
-    # (goldens 00340/00341).  The block's row count comes from the
-    # source blocks or the part rows; only a SELECT into a
-    # non-MergeTree table counts the checkpointed union.  Once the
-    # stored count is unknown (_forget_blocks) it stays unknown.
+    # (goldens 00340/00341).  Once the stored count is unknown
+    # (_forget_blocks) it stays unknown.
     if tdef.row_count >= 0:
-        if n is None:
-            n = merged.count() - tdef.row_count
         tdef.row_count += n
         _s = engine.session_settings
         _mbs = int(str(_s.get("max_block_size", 65536)))
@@ -1927,16 +1966,19 @@ def _ingest_df(
     _publish(engine, tdef)
     _sync_replicas(engine, tdef)
     # materialized-view fan-out: run each dependent MV's SELECT over
-    # the inserted BLOCK only and append the result
-    # (StorageMaterializedView::write)
+    # the inserted BLOCK only and append the result as one more piece
+    # of the MV's rows (StorageMaterializedView::write)
+    blk_view = f"__mvblk_{view}"
     for mv_name, (mv_sql, bases) in getattr(engine, "mv_defs", {}).items():
         if name not in bases:
             continue
         mvdef = engine.tables.get(mv_name)
         if mvdef is None:
             continue
-        blk_view = f"__mvblk_{view}"
-        shaped.createOrReplaceTempView(blk_view)
+        piece.selectExpr(
+            *(f"`{c}`" for c in cols),
+            *(f"`{h}` AS `{pub}`" for h, (pub, _t) in _HIDDEN.items() if mergetree),
+        ).createOrReplaceTempView(blk_view)
         saved_view = engine.table_views.get(name)
         engine.table_views[name] = blk_view
         try:
@@ -1946,16 +1988,68 @@ def _ingest_df(
                 engine.table_views[name] = saved_view
             else:
                 engine.table_views.pop(name, None)
-        base_df = mvdef.raw
         _forget_blocks(mvdef)
-        mvdef.raw = (
-            base_df.unionByName(blk_res, allowMissingColumns=True)
-            if base_df is not None
-            else blk_res
-        ).localCheckpoint(eager=True)
+        _append_piece(mvdef, _checkpoint(blk_res))
         mvdef.raw.createOrReplaceTempView(
             engine.table_views.get(mv_name, _view_of(mv_name))
         )
+
+
+# pieces of one tier that merge into one piece of the next: each row is
+# rewritten once per tier, O(log n) times over n INSERTs, and a table
+# is read from at most (_PIECES_PER_TIER - 1) pieces per tier
+_PIECES_PER_TIER = 4
+# the tier of a raw frame that a statement other than INSERT rebuilt: it
+# takes no part in the tiered merges
+_REBUILT_TIER = -1
+
+
+def _adopt_rows(dst: TableDef, src: TableDef) -> None:
+    """``dst`` takes over the rows of ``src`` (a replica, a re-attached
+    declaration), pieces included."""
+    dst.raw, dst.pieces_raw, dst.pieces = src.raw, src.pieces_raw, list(src.pieces)
+
+
+def _append_piece(tdef: TableDef, piece: DataFrame) -> None:
+    """Add one checkpointed block to the table's rows and merge pieces
+    tier by tier: when the newest _PIECES_PER_TIER pieces share a tier,
+    they are checkpointed as one piece of the next tier."""
+    if tdef.pieces_raw is not tdef.raw:
+        tdef.pieces = [] if tdef.raw is None else [(tdef.raw, _REBUILT_TIER)]
+    pieces = tdef.pieces
+    pieces.append((piece, 0))
+    tier = 0
+    while len(pieces) >= _PIECES_PER_TIER and all(
+        t == tier for _, t in pieces[-_PIECES_PER_TIER:]
+    ):
+        merged = _union_all([p for p, _ in pieces[-_PIECES_PER_TIER:]])
+        pieces[-_PIECES_PER_TIER:] = [(_checkpoint(merged), tier + 1)]
+        tier += 1
+    tdef.raw = tdef.pieces_raw = _union_all([p for p, _ in pieces])
+
+
+def _checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint`` without the plan's constraints.  The
+    checkpoint would keep its optimized plan's constraints, and Spark
+    4.1 keeps some that name attributes of the plan's inner projections
+    (a filter over a renaming projection); a later union of such a
+    checkpoint (an ATTACH, a piece merge) then fails with "key not
+    found".  Stored rows need no constraints, so none are recorded."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.constraintPropagation.enabled"
+    was = conf.get(key)
+    conf.set(key, "false")
+    try:
+        return df.localCheckpoint(eager=eager)
+    finally:
+        conf.set(key, was)
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f, allowMissingColumns=True)
+    return out
 
 
 def _forget_blocks(tdef: TableDef) -> None:
@@ -2041,8 +2135,10 @@ def _fill_defaults(tdef: TableDef, df: DataFrame) -> DataFrame:
             ),
         )
         pending = [c for c in pending if c not in layer]
-    order = [f"`{c.name}`" for c in tdef.columns if not c.is_alias]
-    return df.selectExpr(*order)
+    order = [c.name for c in tdef.columns if not c.is_alias]
+    if df.columns == order:
+        return df
+    return df.selectExpr(*(f"`{c}`" for c in order))
 
 
 # per-type on-disk width estimate for system.parts bytes
@@ -2075,97 +2171,97 @@ def _part_month_expr(tdef: TableDef) -> str:
 
 
 def _tag_part(
-    tdef: TableDef, df: DataFrame, pmap: dict[str, str]
+    tdef: TableDef,
+    df: DataFrame,
+    pmap: dict[str, str],
+    blocks: dict[str, int] | None = None,
 ) -> DataFrame:
     """Attach the hidden ``__part`` column: the name of the data part
     each row belongs to — surfaced as the ``_part`` virtual column
-    (MergeTreeBlockInputStream virtual columns)."""
+    (MergeTreeBlockInputStream virtual columns) — and, given the parts'
+    ``blocks`` numbers, the ``__block`` column."""
     from pyspark.sql import functions as F
 
-    if not pmap:
-        return df.withColumn("__part", F.lit(None).cast("string"))
-    whens = " ".join(f"WHEN '{p}' THEN '{n}'" for p, n in pmap.items())
-    return df.withColumn(
-        "__part", F.expr(f"CASE {_part_month_expr(tdef)} {whens} END")
+    def by_partition(values: dict, typ: str) -> F.Column:
+        whens = " ".join(f"WHEN '{p}' THEN {v}" for p, v in values.items())
+        return F.expr(
+            f"CASE {_part_month_expr(tdef)} {whens} END" if whens else f"CAST(NULL AS {typ})"
+        )
+
+    tags = {"__part": by_partition({p: f"'{n}'" for p, n in pmap.items()}, "STRING")}
+    if blocks is not None:
+        tags["__block"] = by_partition(blocks, "BIGINT")
+    return df.withColumns(tags)
+
+
+def _part_names(tdef: TableDef) -> dict[str, str]:
+    """Partition id → name of its active part (one per partition after
+    a merge)."""
+    return {p["partition"]: p["name"] for p in tdef.parts if p["active"]}
+
+
+def _block_stats(tdef: TableDef, block: DataFrame, cols: list[str]) -> list:
+    """The one Spark job of an INSERT: it materializes the block's
+    (lazy) checkpoint and returns one row per month partition with its
+    row count; for MergeTree-family tables also the part bookkeeping
+    (string bytes, min/max date), and for Replicated ones the sum and
+    xor of per-row hashes over ``cols`` (the dedup fingerprint)."""
+    from pyspark.sql import functions as F
+
+    aggs = ["count(1) AS __rows"]
+    dcol = None
+    if tdef.engine.endswith("MergeTree"):
+        dcol = _month_col(tdef)
+        aggs.append(" + ".join(
+            ["0"] + [
+                f"sum(length(`{c.name}`))"
+                for c in tdef.columns
+                if c.spark_type == "STRING" and not c.is_alias
+            ]
+        ) + " AS __sbytes")
+        if dcol is not None:
+            aggs += [
+                f"date_format(min(`{dcol}`), 'yyyyMMdd') AS __mind",
+                f"date_format(max(`{dcol}`), 'yyyyMMdd') AS __maxd",
+            ]
+    if getattr(tdef.meta, "replicated", False):
+        h = "xxhash64(" + ", ".join(f"CAST(`{c}` AS STRING)" for c in cols) + ")"
+        aggs += [
+            f"sum(CAST({h} AS DECIMAL(38,0))) AS __hsum",
+            f"bit_xor({h}) AS __hxor",
+        ]
+    key = "'all'" if dcol is None else f"date_format(`{dcol}`, 'yyyyMM')"
+    return (
+        block.groupBy(F.expr(key).alias("__partition"))
+        .agg(*(F.expr(a) for a in aggs))
+        .collect()
     )
 
 
-def _retag_parts(tdef: TableDef, keep: set[str] = frozenset()) -> None:
-    """After a merge renamed parts, recompute every row's ``__part``
-    from the current per-partition part list.  Rows belonging to parts
-    in ``keep`` (skipped by the merge selector) keep their tag."""
-    if tdef.raw is None:
-        return
-    from pyspark.sql import functions as F
-
-    raw = tdef.raw
-    kept_raw = None
-    if keep and "__part" in raw.columns:
-        _in_keep = F.coalesce(F.col("__part").isin(*keep), F.lit(False))
-        kept_raw = raw.filter(_in_keep)
-        raw = raw.filter(~_in_keep)
-    for hidden in ("__part", "_part"):
-        if hidden in raw.columns:
-            raw = raw.drop(hidden)
-    pmap = {
-        p["partition"]: p["name"]
-        for p in tdef.parts
-        if p["active"] and p["name"] not in keep
-    }
-    retagged = _tag_part(tdef, raw, pmap)
-    if kept_raw is not None:
-        retagged = kept_raw.unionByName(retagged)
-    tdef.raw = retagged
-
-
-def _track_insert_parts(
-    engine, tdef: TableDef, block: DataFrame
-) -> tuple[dict[str, str], int]:
+def _record_parts(tdef: TableDef, block: DataFrame, stats: list) -> DataFrame:
     """Record one data part per (INSERT block × month partition), like
-    the reference's per-block part creation (MergeTreeDataWriter).
-    Returns {partition: part_name} and the block's row count.
-    Runs one aggregation job over the just-inserted block, one of the
-    two jobs every MergeTree INSERT pays (the other is the checkpoint),
-    so its cost is on the ingest path."""
+    the reference's per-block part creation (MergeTreeDataWriter), from
+    the block's ``_block_stats`` rows.  Returns the block with each
+    row's part name and block number."""
     from pyspark.sql import functions as F
 
     dcol = _month_col(tdef)
     fixed = sum(_TYPE_BYTES.get(c.spark_type, 8) for c in tdef.columns)
-    str_cols = [c.name for c in tdef.columns if c.spark_type == "STRING"]
-    str_bytes = (
-        sum((F.sum(F.length(F.col(f"`{c}`"))) for c in str_cols), F.lit(0))
-        if str_cols
-        else F.lit(0)
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("__rows"),
-        str_bytes.alias("__sbytes"),
-    ]
-    if dcol is not None:
-        d = F.col(f"`{dcol}`")
-        grouped = block.groupBy(
-            F.date_format(d, "yyyyMM").alias("__partition")
-        ).agg(
-            *aggs,
-            F.date_format(F.min(d), "yyyyMMdd").alias("__mind"),
-            F.date_format(F.max(d), "yyyyMMdd").alias("__maxd"),
-        )
-    else:
-        grouped = block.groupBy(F.lit("all").alias("__partition")).agg(*aggs)
     pmap: dict[str, str] = {}
-    total = 0
-    for r in grouped.collect():
+    blocks: dict[str, int] = {}
+    for r in stats:
         tdef.next_block += 1
         b = tdef.next_block
+        partition = r["__partition"] or "all"
         mind = r["__mind"] if dcol is not None else "19700101"
         maxd = r["__maxd"] if dcol is not None else "19700101"
         rows = int(r["__rows"])
-        total += rows
-        pmap[r["__partition"] or "all"] = f"{mind}_{maxd}_{b}_{b}_0"
+        pmap[partition] = f"{mind}_{maxd}_{b}_{b}_0"
+        blocks[partition] = b
         tdef.parts.append(
             {
-                "partition": r["__partition"] or "all",
-                "name": f"{mind}_{maxd}_{b}_{b}_0",
+                "partition": partition,
+                "name": pmap[partition],
                 "rows": rows,
                 "marks": (rows + 8191) // 8192,
                 "bytes": fixed * rows + int(r["__sbytes"] or 0),
@@ -2177,21 +2273,16 @@ def _track_insert_parts(
                 "active": 1,
             }
         )
-    return pmap, total
+    return _tag_part(tdef, block, pmap, blocks)
 
 
-def merge_parts(tdef: TableDef, keep: set[str] = frozenset()) -> None:
-    """OPTIMIZE's part bookkeeping: merge the selected active parts
-    within each partition into one (level = max+1); parts in ``keep``
-    stay untouched (MergeTreeDataMerger)."""
+def merge_parts(tdef: TableDef) -> None:
+    """OPTIMIZE's part bookkeeping: merge the active parts within each
+    partition into one (level = max+1) (MergeTreeDataMerger)."""
     by_part: dict[str, list[dict]] = {}
-    kept_parts: list[dict] = []
     for p in tdef.parts:
-        if p["name"] in keep:
-            kept_parts.append(p)
-        else:
-            by_part.setdefault(p["partition"], []).append(p)
-    merged: list[dict] = kept_parts
+        by_part.setdefault(p["partition"], []).append(p)
+    merged: list[dict] = []
     for partition, ps in sorted(by_part.items()):
         if len(ps) == 1:
             merged.append(ps[0])
@@ -2272,7 +2363,7 @@ def _sync_raw(engine, tdef) -> None:
     )
     want = [c.name for c in tdef.columns if not c.is_alias]
     for col in raw.columns:
-        if col not in want and col != "__part":
+        if col not in want and col not in _HIDDEN:
             raw = raw.drop(col)
     for c in tdef.columns:
         if c.is_alias:
@@ -2296,7 +2387,7 @@ def _sync_replicas(engine, tdef: TableDef) -> None:
         odef = engine.tables.get(other)
         if odef is None or odef is tdef:
             continue
-        odef.raw = tdef.raw
+        _adopt_rows(odef, tdef)
         odef.columns = tdef.columns  # ALTERs are replicated
         odef.parts = tdef.parts
         odef.block_sizes = list(tdef.block_sizes)
@@ -2367,16 +2458,14 @@ def _alter(engine, tokens: list[Token]) -> None:
                         f"CAST({month} AS STRING) = '{target}'"
                     )
                 if verb == "DETACH":
-                    moved = tdef.raw.filter(in_part).localCheckpoint(
-                        eager=True
-                    )
+                    moved = _checkpoint(tdef.raw.filter(in_part))
                     if gone:
                         for p in gone:
-                            pdf = (
+                            pdf = _checkpoint(
                                 moved.filter(F.col("__part") == p["name"])
                                 if "__part" in moved.columns
                                 else moved
-                            ).localCheckpoint(eager=True)
+                            )
                             stash[p["name"]] = (pdf, p)
                     else:
                         stash[target] = (moved, {
@@ -2386,9 +2475,7 @@ def _alter(engine, tokens: list[Token]) -> None:
                             "min_block": 0, "max_block": 0, "level": 0,
                             "active": 1,
                         })
-                tdef.raw = tdef.raw.filter(~in_part).localCheckpoint(
-                    eager=True
-                )
+                tdef.raw = _checkpoint(tdef.raw.filter(~in_part))
                 tdef.parts = [
                     p for p in tdef.parts if p["partition"] != target
                 ]
@@ -2417,9 +2504,9 @@ def _alter(engine, tokens: list[Token]) -> None:
                     if got is None:
                         continue
                     pdf, p = got
-                    tdef.raw = tdef.raw.unionByName(
-                        pdf, allowMissingColumns=True
-                    ).localCheckpoint(eager=True)
+                    tdef.raw = _checkpoint(
+                        tdef.raw.unionByName(pdf, allowMissingColumns=True)
+                    )
                     if p["name"] not in {q["name"] for q in tdef.parts}:
                         tdef.parts.append(p)
             _forget_blocks(tdef)
@@ -2446,13 +2533,13 @@ def _alter(engine, tokens: list[Token]) -> None:
                 from pyspark.sql import functions as F
 
                 month = _part_month_expr(tdef)
-                tdef.raw = tdef.raw.withColumn(
+                tdef.raw = _checkpoint(tdef.raw.withColumn(
                     col,
                     F.expr(
                         f"IF(CAST({month} AS STRING) = '{part_lit}', "
                         f"NULL, `{col}`)"
                     ),
-                ).localCheckpoint(eager=True)
+                ))
                 _publish(engine, tdef)
                 continue
             # DROP COLUMN n on a Nested block removes every n.* member
@@ -2640,7 +2727,7 @@ def _rename(engine, tokens: list[Token]) -> None:
         engine.table_views[new] = new_view
         engine.table_meta[new_view] = meta
         _publish(engine, tdef)
-        engine.spark.catalog.dropTempView(old_view)
+        _drop_views(engine, old_view)
         if i < len(tokens) and tokens[i].text == ",":
             i += 1
 
@@ -2800,19 +2887,22 @@ def _optimize(engine, tokens: list[Token]) -> None:
     if tdef is None:
         raise ValueError(f"OPTIMIZE on unknown table {name!r}")
     view = engine.table_views.get(name, _view_of(name))
-    df = engine.spark.table(view)
     # OPTIMIZE merges every active part of the partition (the
-    # aggressive selectPartsToMerge path); no parts are skipped
-    keep_names: set[str] = set()
-    keep_df = None
-    if "_part" in df.columns:
-        df = df.drop("_part")  # virtual column, not merge input
+    # aggressive selectPartsToMerge path).  The merge input is the
+    # published rows; a row keeps its block number and offset, the
+    # part name is recomputed after the merge
+    df = engine.spark.table(view).drop("_part")
+    df = df.withColumnsRenamed(
+        {pub: hidden for hidden, (pub, _t) in _HIDDEN.items() if pub in df.columns}
+    )
     meta = tdef.meta
     pk = [c for c in meta.primary_key if c in df.columns]
     if not pk:
         return None
     if tdef.engine == "ReplacingMergeTree":
-        df = compact_replacing(df, pk, meta.version_col)
+        df = compact_replacing(
+            df, pk, meta.version_col, order=("__block", "__offset")
+        )
     elif tdef.engine == "SummingMergeTree":
         from .translate import summing_parts
 
@@ -2843,50 +2933,37 @@ def _optimize(engine, tokens: list[Token]) -> None:
             f"GROUP BY {', '.join(f'`{k}`' for k in pk)}"
         ).select(*[f"`{c.name}`" for c in tdef.columns])
     else:
-        # plain MergeTree: merge changes layout, not rows
-        merge_parts(tdef, keep_names)
-        _retag_parts(tdef, keep_names)
+        # plain MergeTree: the merge changes the layout, not the rows
+        merge_parts(tdef)
+        tdef.raw = _checkpoint(
+            _tag_part(tdef, tdef.raw.drop("__part"), _part_names(tdef))
+        )
         _publish(engine, tdef)
         return None
-    # a merge materializes current defaults into the merged part
-    if keep_df is not None:
-        tdef.raw = (
-            keep_df.withColumnRenamed("_part", "__part")
-            .unionByName(df, allowMissingColumns=True)
-            .localCheckpoint(eager=True)
-        )
-    else:
-        tdef.raw = df.localCheckpoint(eager=True)
-    _forget_blocks(tdef)
-    merge_parts(tdef, keep_names)
-    if tdef.parts:
-        # compaction may have dropped rows (Replacing dedup, Collapsing
-        # cancellation, Summing/Aggregating group-merge): refresh each
-        # merged part's row count from the actual merged data
-        from pyspark.sql import functions as F
+    # a merge materializes current defaults into the merged part.  The
+    # merged parts' names are known before the merge runs; one job runs
+    # it into the (lazy) checkpoint and counts each partition's rows from
+    # it: compaction may have dropped rows (Replacing dedup, Collapsing
+    # cancellation, Summing/Aggregating group-merge), so each merged
+    # part's row count is refreshed
+    from pyspark.sql import functions as F
 
-        dcol = _month_col(tdef)
-        if dcol is not None and dcol in df.columns:
-            counts = {
-                r["__p"]: int(r["__c"])
-                for r in df.groupBy(
-                    F.date_format(F.col(f"`{dcol}`"), "yyyyMM").alias("__p")
-                )
-                .agg(F.count(F.lit(1)).alias("__c"))
-                .collect()
-            }
-        else:
-            counts = {"all": df.count()}
-        kept = []
-        for p in tdef.parts:
-            if p["name"] in keep_names:
-                kept.append(p)  # untouched by this merge
-                continue
-            rows = counts.get(p["partition"], 0)
-            if rows:
-                p["rows"] = rows
-                p["marks"] = (rows + 8191) // 8192
-                kept.append(p)
-        tdef.parts = kept
-    _retag_parts(tdef, keep_names)
+    merge_parts(tdef)
+    merged = _checkpoint(_tag_part(tdef, df, _part_names(tdef)), eager=False)
+    counts = {
+        r["__p"]: int(r["__c"])
+        for r in merged.groupBy(F.expr(_part_month_expr(tdef)).alias("__p"))
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .collect()
+    }
+    tdef.raw = merged
+    _forget_blocks(tdef)
+    kept = []
+    for p in tdef.parts:
+        rows = counts.get(p["partition"], 0)
+        if rows:
+            p["rows"] = rows
+            p["marks"] = (rows + 8191) // 8192
+            kept.append(p)
+    tdef.parts = kept
     _publish(engine, tdef)

@@ -2677,7 +2677,14 @@ def _final_subquery(name: str, ctx: Ctx) -> str:
             f"sum({meta.sign_col}) OVER (PARTITION BY {pk}) AS {rn}_s FROM {name}) "
             f"WHERE {rn} = 1 AND {rn}_s > 0)"
         )
-    order = f"{meta.version_col} DESC" if meta.version_col else "1"
+    # the max version, and among equal versions the last inserted row
+    # (ReplacingSortedBlockInputStream): created MergeTree-family tables
+    # publish each row's insertion position (NULL, i.e. oldest, for
+    # rows of a rebuilt table)
+    keys = [f"{meta.version_col} DESC"] if meta.version_col else []
+    if tdef is not None and tdef.engine.endswith("MergeTree"):
+        keys += ["_block_number DESC", "_block_offset DESC"]
+    order = ", ".join(keys) or "1"
     return (
         f"(SELECT * EXCEPT ({rn}) FROM (SELECT *, row_number() OVER "
         f"(PARTITION BY {pk} ORDER BY {order}) AS {rn} FROM {name}) WHERE {rn} = 1)"

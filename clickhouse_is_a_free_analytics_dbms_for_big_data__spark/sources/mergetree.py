@@ -379,12 +379,18 @@ def read_mergetree(
 
 
 def compact_replacing(
-    df: DataFrame, pk: Sequence[str], version: str | None = None
+    df: DataFrame,
+    pk: Sequence[str],
+    version: str | None = None,
+    order: Sequence[str] = (),
 ) -> DataFrame:
-    """ReplacingMergeTree: keep the max-version row per PK
-    (DataStreams/ReplacingSortedBlockInputStream.h:15)."""
-    order = [F.col(version).desc()] if version else [F.lit(1)]
-    w = Window.partitionBy(*pk).orderBy(*order)
+    """ReplacingMergeTree: keep the max-version row per PK, and among
+    equal versions (or without a version column) the last inserted one
+    (DataStreams/ReplacingSortedBlockInputStream.h:15).  ``order`` names
+    the columns of the insertion position, oldest first."""
+    keys = [F.col(version).desc()] if version else []
+    keys += [F.col(c).desc() for c in order]
+    w = Window.partitionBy(*pk).orderBy(*(keys or [F.lit(1)]))
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

@@ -594,7 +594,7 @@ def test_values_insert_job_counts(ch):
     ch.execute("CREATE TABLE vj_mt (d Date, k UInt32) ENGINE = MergeTree(d, (k), 8192)")
     ch.execute("CREATE TABLE vj_mem (d Date, k UInt32) ENGINE = Memory")
     payload = ", ".join(f"('2024-0{1 + i % 3}-01', {i})" for i in range(500))
-    for t, most in (("vj_mt", 2), ("vj_mem", 1)):
+    for t, most in (("vj_mt", 1), ("vj_mem", 1)):
         for k in range(2):  # first insert into a fresh table, then a later one
             n = _jobs_of(ch, f"INSERT INTO {t} VALUES {payload}", f"vj-{t}-{k}")
             assert 1 <= n <= most, (t, k, n)
@@ -659,3 +659,196 @@ def test_values_insert_with_malformed_setting_raises(ch):
             ch.execute("INSERT INTO vbad VALUES (1)")
     finally:
         del ch.session_settings["max_block_size"]
+
+
+# ---------------------------------------------------------------- pieces
+# An INSERT checkpoints its block alone as one more piece of the table's
+# rows; pieces merge tier by tier (statements._append_piece).
+
+
+def _pieces(ch, t):
+    return ch.tables[t].pieces
+
+
+def test_insert_materializes_only_its_block(ch):
+    ch.execute("CREATE TABLE pc_one (d Date, k UInt32, s String) "
+               "ENGINE = MergeTree(d, (k), 8192)")
+    sizes = [5, 3, 7]
+    for j, n in enumerate(sizes):
+        before = [f for f, _ in _pieces(ch, "pc_one")]
+        ch.execute("INSERT INTO pc_one VALUES " + ", ".join(
+            f"('2024-0{1 + i % 2}-01', {i}, 'b{j}')" for i in range(n)))
+        after = [f for f, _ in _pieces(ch, "pc_one")]
+        # the earlier pieces are the same checkpoints, untouched
+        assert len(after) == len(before) + 1
+        assert all(a is b for a, b in zip(after, before))
+        assert after[-1].count() == n
+    assert ch.execute("SELECT count() FROM pc_one").collect()[0][0] == sum(sizes)
+
+
+def _replacing_model(rows, version):
+    """Per key the max-version row, among equal versions (or without a
+    version column) the last inserted one."""
+    out = {}
+    for r in rows:
+        cur = out.get(r[1])
+        if cur is None or version is None or r[version] >= cur[version]:
+            out[r[1]] = r
+    return sorted(out.values(), key=lambda r: r[1])
+
+
+def _summing_model(rows):
+    out = {}
+    for d, k, hits, amount in rows:
+        cur = out.setdefault((k, d), [d, k, 0, 0])
+        cur[2] += hits
+        cur[3] += amount
+    return sorted((r for r in out.values() if r[2] or r[3]), key=lambda r: (r[1], r[0]))
+
+
+def _tuples(rows):
+    return [tuple(str(x) for x in r) for r in rows]
+
+
+@pytest.mark.parametrize("engine", ["replacing_ver", "replacing", "summing"])
+def test_insert_replay_matches_model(ch, engine):
+    import random
+
+    rng = random.Random(7)
+    t = f"pc_model_{engine}"
+    if engine == "summing":
+        ch.execute(f"CREATE TABLE {t} (d Date, k UInt32, hits UInt64, amount Int64) "
+                   "ENGINE = SummingMergeTree(d, (k, d), 8192)")
+    else:
+        ver = ", v" if engine == "replacing_ver" else ""
+        ch.execute(f"CREATE TABLE {t} (d Date, k UInt32, x UInt32, v UInt32) "
+                   f"ENGINE = ReplacingMergeTree(d, (k), 8192{ver})")
+    rows = []
+    for _b in range(6):
+        block = []
+        for _i in range(rng.randint(1, 30)):
+            k = rng.randint(0, 12)
+            if engine == "summing":
+                d = f"2024-0{rng.randint(1, 3)}-0{rng.randint(1, 9)}"
+                block.append((d, k, rng.randint(1, 3), rng.randint(-5, 5)))
+            else:  # one partition; few versions, so equal ones are common
+                d = f"2024-01-0{rng.randint(1, 9)}"
+                block.append((d, k, rng.randint(0, 999), rng.randint(0, 2)))
+        rows += block
+        ch.execute(f"INSERT INTO {t} VALUES " + ", ".join(
+            f"('{r[0]}', {', '.join(str(x) for x in r[1:])})" for r in block))
+    if engine == "summing":
+        cols, want = "d, k, hits, amount", _summing_model(rows)
+        order = "k, d"
+    else:
+        cols = "d, k, x, v"
+        want = _replacing_model(rows, 3 if engine == "replacing_ver" else None)
+        order = "k"
+    final = ch.execute(f"SELECT {cols} FROM {t} FINAL ORDER BY {order}").collect()
+    assert _tuples(final) == _tuples(want)
+    parts = ch.execute(f"SELECT partition, rows, level FROM system.parts WHERE table = '{t}'").collect()
+    assert sum(r[1] for r in parts) == len(rows) and {r[2] for r in parts} == {0}
+    ch.execute(f"OPTIMIZE TABLE {t}")
+    merged = ch.execute(f"SELECT {cols} FROM {t} ORDER BY {order}").collect()
+    assert _tuples(merged) == _tuples(want)
+    parts = ch.execute(
+        f"SELECT partition, rows FROM system.parts WHERE table = '{t}' ORDER BY partition"
+    ).collect()
+    by_month: dict[str, int] = {}
+    for r in want:
+        month = r[0][:7].replace("-", "")
+        by_month[month] = by_month.get(month, 0) + 1
+    assert [(r[0], r[1]) for r in parts] == sorted(by_month.items())
+
+
+def test_replacing_keeps_last_inserted_row_across_parts(ch):
+    for t, ver in (("pc_last", ""), ("pc_last_ver", ", v")):
+        ch.execute(f"CREATE TABLE {t} (d Date, k UInt32, x String, v UInt32) "
+                   f"ENGINE = ReplacingMergeTree(d, (k), 8192{ver})")
+        ch.execute(f"INSERT INTO {t} VALUES ('2024-01-01', 1, 'old', 5), ('2024-01-02', 2, 'a', 5)")
+        ch.execute(f"INSERT INTO {t} VALUES ('2024-01-01', 1, 'new', 5), ('2024-01-03', 1, 'newer', 5)")
+        want = [(1, "newer"), (2, "a")]
+        got = ch.execute(f"SELECT k, x FROM {t} FINAL ORDER BY k").collect()
+        assert [tuple(r) for r in got] == want, t
+        ch.execute(f"OPTIMIZE TABLE {t}")
+        got = ch.execute(f"SELECT k, x FROM {t} ORDER BY k").collect()
+        assert [tuple(r) for r in got] == want, t
+
+
+def test_mv_fanout_sees_only_the_block(ch):
+    ch.execute("CREATE TABLE pc_src (d Date, k UInt32) ENGINE = MergeTree(d, (k), 8192)")
+    ch.execute("CREATE MATERIALIZED VIEW pc_mv AS SELECT k, count() AS c FROM pc_src GROUP BY k")
+    ch.execute("INSERT INTO pc_src VALUES ('2024-01-01', 1), ('2024-01-01', 1), ('2024-01-01', 2)")
+    ch.execute("INSERT INTO pc_src VALUES ('2024-01-01', 1)")
+    got = sorted(tuple(r) for r in ch.execute("SELECT k, c FROM pc_mv").collect())
+    assert got == [(1, 1), (1, 2), (2, 1)]
+
+
+@pytest.mark.parametrize("engine", ["MergeTree(d, (k), 8192)", "Memory"])
+def test_insert_select_rand_reads_back_the_same_values(ch, engine):
+    t = "pc_rand_" + engine.split("(")[0].lower()
+    ch.execute(f"CREATE TABLE {t} (d Date, k UInt32) ENGINE = {engine}")
+    ch.execute(f"INSERT INTO {t} SELECT toDate('2024-01-01'), rand() FROM numbers(200)")
+    first = ch.execute(f"SELECT k FROM {t} ORDER BY k").collect()
+    assert len(first) == 200
+    assert first == ch.execute(f"SELECT k FROM {t} ORDER BY k").collect()
+
+
+def test_alter_add_column_after_several_pieces(ch):
+    ch.execute("CREATE TABLE pc_alter (d Date, k UInt32) ENGINE = MergeTree(d, (k), 8192)")
+    for i in range(3):
+        ch.execute(f"INSERT INTO pc_alter VALUES ('2024-01-0{i + 1}', {i})")
+    assert len(_pieces(ch, "pc_alter")) == 3
+    ch.execute("ALTER TABLE pc_alter ADD COLUMN s String DEFAULT 'dflt'")
+    ch.execute("INSERT INTO pc_alter VALUES ('2024-01-09', 9, 'new')")
+    got = ch.execute("SELECT k, s FROM pc_alter ORDER BY k").collect()
+    assert [tuple(r) for r in got] == [(0, "dflt"), (1, "dflt"), (2, "dflt"), (9, "new")]
+
+
+def test_detach_attach_partition_across_pieces(ch):
+    ch.execute("CREATE TABLE pc_det (d Date, k UInt32) ENGINE = MergeTree(d, (k), 8192)")
+    for i in range(3):
+        ch.execute(f"INSERT INTO pc_det VALUES ('2024-01-0{i + 1}', {i}), ('2024-02-0{i + 1}', {10 + i})")
+    everything = ch.execute("SELECT k, _part FROM pc_det ORDER BY k").collect()
+    ch.execute("ALTER TABLE pc_det DETACH PARTITION 202401")
+    assert [r.k for r in ch.execute("SELECT k FROM pc_det ORDER BY k").collect()] == [10, 11, 12]
+    ch.execute("INSERT INTO pc_det VALUES ('2024-02-09', 19)")
+    ch.execute("ALTER TABLE pc_det ATTACH PARTITION 202401")
+    got = ch.execute("SELECT k, _part FROM pc_det WHERE k != 19 ORDER BY k").collect()
+    assert got == everything
+    assert ch.execute("SELECT count() FROM system.parts WHERE table = 'pc_det'").collect()[0][0] == 7
+
+
+def test_piece_tiers_bound_pieces_and_rewrites(monkeypatch):
+    """200 one-row appends: pieces merge tier by tier, so the piece count
+    stays bounded and each row is rewritten once per tier."""
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect import (
+        statements as st,
+    )
+
+    rewrites: dict[int, int] = {}
+
+    def checkpoint(rows, eager=True):
+        for r in rows:
+            rewrites[r] = rewrites.get(r, 0) + 1
+        return list(rows)
+
+    monkeypatch.setattr(st, "_checkpoint", checkpoint)
+    monkeypatch.setattr(st, "_union_all", lambda frames: [r for f in frames for r in f])
+    tdef = st.TableDef("t", [], "MergeTree", None)
+    most = 0
+    for i in range(200):
+        st._append_piece(tdef, [i])
+        most = max(most, len(tdef.pieces))
+        assert tdef.raw == list(range(i + 1))
+    tiers = 4  # 4**4 > 200
+    assert most <= (st._PIECES_PER_TIER - 1) * tiers + 1
+    assert max(rewrites.values()) <= tiers - 1
+
+
+def test_one_row_inserts_keep_few_pieces(ch):
+    ch.execute("CREATE TABLE pc_many (d Date, k UInt32) ENGINE = MergeTree(d, (k), 8192)")
+    for i in range(40):
+        ch.execute(f"INSERT INTO pc_many VALUES ('2024-01-01', {i})")
+    assert len(_pieces(ch, "pc_many")) <= 3 * 3
+    assert [r.k for r in ch.execute("SELECT k FROM pc_many").collect()] == list(range(40))
